@@ -14,7 +14,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-# Input sizes per workload, recorded in design.json (a test keeps them equal).
+# Input sizes per workload; every run records them in its artifact.
 SIZES = {
     "graph_motif": {
         # Graph analytics part: disjoint clusters, each a short directed
@@ -29,13 +29,14 @@ SIZES = {
         "ring_min": 16, "ring_max": 18,
         "chords_max": 1,
         "landmark_sets": 3, "landmarks": 4,
-        # Motif part: source out-degree is heavy-tailed (Zipf weights),
-        # target in-degree is bounded. A small share of targets sits above
-        # motif_chunk, so sharedNeighbors runs both its cold self-join and
-        # its chunked hot-hub branch.
-        "sources": 1000, "targets": 2000,
+        # Motif part: ~62k edges, the size of the j5 edge set at sf0.01
+        # (lineitem's supplier->part edges, 60k rows). Source out-degree is
+        # heavy-tailed (Zipf weights), target in-degree is bounded. A small
+        # share of targets sits above motif_chunk, so sharedNeighbors runs
+        # both its cold self-join and its chunked hot-hub branch.
+        "sources": 1000, "targets": 9000,
         "source_zipf": 1.1,
-        "cold_deg_mean": 6, "hot_share": 0.02,
+        "cold_deg_mean": 6, "hot_share": 0.01,
         "hot_deg_min": 65, "hot_deg_max": 130,
         "motif_chunk": 64,
     },

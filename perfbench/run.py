@@ -32,7 +32,6 @@ sys.path.insert(0, HERE)
 import gen  # noqa: E402
 import workloads  # noqa: E402
 
-SETUP_REPS = 3
 DEADLINE_S = 175  # a run must exit within 180 s once built
 
 FUNCTIONS = (
@@ -165,7 +164,7 @@ def end_to_end(res, failures):
     lat = [r["t"] for r in recs]
     pct = tail_percentile(len(lat))
     return {
-        "setup_s": statistics.median(s["total_s"] for s in res["setups"]) + res["pass_s"],
+        "setup_s": res["setup"]["total_s"],
         "ops_per_s": len(recs) / res["loop_s"],
         "latency_p50_s": nearest_rank(lat, 50.0),
         "latency_tail_s": nearest_rank(lat, pct) if pct else None,
@@ -232,31 +231,26 @@ def per_layer(res, spans):
     m["jvm.gc_s_per_op"] = sum(s["gc_ms"] for s in traced_ops) / 1e3 / n_ops
     m["jvm.jit_compile_s"] = res["jit_compile_s"]
     m["jvm.code_cache_mb"] = res["code_cache_mb"]
-    m["core.Graft.session_s"] = statistics.median(s["session_s"] for s in res["setups"])
+    m["core.Graft.session_s"] = res["setup"]["session_s"]
     m["trace.overhead_pct"] = overhead_pct(res["records"])
     return m
 
 
 def overhead_pct(records):
-    """Traced versus untraced latency over the cycle positions measured
-    both ways."""
-    by = {}
+    """Traced versus untraced latency of the same operations. A traced
+    run repeats each cycle's variants in the next cycle and alternates
+    the traced half, so every operation is measured both ways. The mean
+    log ratio over the pairs cancels warm-up between the two cycles, which
+    slows the traced side of half the pairs and the untraced side of the
+    other half."""
+    pairs = {}
     for r in records:
-        by.setdefault(r["pos"], {}).setdefault(r["traced"], []).append(r["t"])
-    both = [v for v in by.values() if len(v) == 2]
-    on = sum(statistics.fmean(v[True]) for v in both)
-    off = sum(statistics.fmean(v[False]) for v in both)
-    return (on / off - 1.0) * 100.0 if off else 0.0
+        pairs.setdefault((r["cycle"] // 2, r["pos"], r["v"]), {})[r["traced"]] = r["t"]
+    logs = [math.log(p[True] / p[False]) for p in pairs.values() if len(p) == 2]
+    return (math.exp(statistics.fmean(logs)) - 1.0) * 100.0 if logs else 0.0
 
 
 # --- run --------------------------------------------------------------------
-
-def cpu_steal_s():
-    """Steal time of all CPUs from /proc/stat, in seconds."""
-    with open("/proc/stat") as f:
-        fields = f.readline().split()
-    return int(fields[8]) / os.sysconf("SC_CLK_TCK")
-
 
 def launch(cp, jvm_opts, plan, rundir, deadline):
     plan_path = os.path.join(rundir, "plan.json")
@@ -317,10 +311,9 @@ def main(argv=None):
     plan = {"workload": a.workload, "seed": a.seed, "seconds": a.seconds,
             "trace": bool(a.trace), "inputs": inputs, "files": files,
             "work": rundir, "variants": var, "cycles": cyc,
-            "setup": workloads.setup_pass(a.workload, var), "setup_reps": SETUP_REPS}
+            "setup": workloads.setup_pass(a.workload, var)}
     os.makedirs(os.path.join(WORK, "results"), exist_ok=True)
     stem = os.path.join(WORK, "results", f"{a.workload}-s{a.seed}-trace{a.trace}")
-    steal0 = cpu_steal_s()
     try:
         res, spans = launch(cp, jvm_opts, plan, rundir, deadline)
     except (RuntimeError, OSError) as e:
@@ -336,29 +329,30 @@ def main(argv=None):
     e2e = end_to_end(res, failures)
     n = len(res["records"])
     pct = tail_percentile(n)
+    stage_match = True
     if a.trace:
         layer = per_layer(res, self_times(spans))
         shown, units = layer, dict(per_layer_names())
         lt = res["listener"]
+        # the listener's task sums must add up to its stage totals, or
+        # the per-layer attribution lost or double-counted tasks
         stage_match = (lt["stage_tasks"] == lt["totals"]["tasks"]
                        and lt["stage_cpu_ns"] == lt["totals"]["task_cpu_ns"])
     else:
         shown, units = e2e, dict(END_TO_END)
     names = [k for k, _ in per_layer_names()] if a.trace else RESULT_E2E
     result = {
-        "correct": not failures and not setup_failures,
+        "correct": not failures and not setup_failures and stage_match,
         "attempted": n, "failed": len(failures),
         "metrics": {k: {"value": shown[k], "unit": units[k]} for k in names},
     }
 
     artifact = {"workload": a.workload, "seed": a.seed, "seconds": a.seconds,
-                "sizes": meta["sizes"], "env": res["env"], "setups": res["setups"],
+                "sizes": meta["sizes"], "variants": var, "env": res["env"],
+                "setup": res["setup"],
                 "tail_percentile": pct, "samples": n, "cycles": res["cycles"],
                 "end_to_end": e2e,
                 "failures": failures, "setup_failures": setup_failures,
-                # CPU time the hypervisor gave other guests while the JVM ran:
-                # a slow draw with high steal is a contended host
-                "host_steal_s": cpu_steal_s() - steal0,
                 "wall_s": time.monotonic() - start}
     if a.trace:
         artifact.update(per_layer=layer, listener=res["listener"], stage_sums_match=stage_match)
@@ -370,7 +364,7 @@ def main(argv=None):
     env = res["env"]
     print(f"# {a.workload} seed={a.seed} nproc={env['nproc']} heap={env['max_heap_mb']}MB "
           f"spark={env['spark_version']} java={env['java_version']} "
-          f"ops={n} cycles={res['cycles']} host_steal={artifact['host_steal_s']:.1f}s tail="
+          f"ops={n} cycles={res['cycles']} tail="
           + (f"p{pct:g} ({beyond(n, pct)} beyond)" if pct else "n/a (fewer than 20 ops)"))
     for f in failures + setup_failures:
         print("# FAILED", json.dumps(f))

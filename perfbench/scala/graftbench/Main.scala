@@ -188,28 +188,21 @@ object Main {
       }
     }
 
-    // --- set-up: the session and the inputs several times (the first
-    // from JVM main), then one untimed pass of every operation type on
-    // the last session, which pays first-pass codegen and JIT ---
-    var spark: SparkSession = null
-    var in: Inputs = null
-    val setups = new java.util.ArrayList[Any]()
-    for (rep <- 1 to plan.get("setup_reps").asInt) {
-      val t0 = if (rep == 1) mainNs else System.nanoTime()
-      if (spark != null) spark.stop()
-      val s0 = System.nanoTime()
-      spark = Graft.session("perfbench")
-      val r0 = System.nanoTime()
-      in = new Inputs(spark, plan.get("inputs").asText, files)
-      val end = System.nanoTime()
-      setups.add(jmap("session_s" -> (r0 - s0) / 1e9, "inputs_s" -> (end - r0) / 1e9,
-        "total_s" -> (end - t0) / 1e9))
-    }
+    // --- set-up, timed once and cold: JVM start, Graft.session, the
+    // inputs, then one untimed pass of every operation type, which pays
+    // first-pass codegen and JIT ---
+    val bootS = ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
+    val spark = Graft.session("perfbench")
+    val sessionEnd = System.nanoTime()
+    val in = new Inputs(spark, plan.get("inputs").asText, files)
+    val inputsEnd = System.nanoTime()
     val setupRecords = new java.util.ArrayList[Any]()
-    val pass0 = System.nanoTime()
     plan.get("setup").elements.asScala.foreach(id =>
       setupRecords.add(record(spark, in, id.asText, -1, None)))
-    val passS = (System.nanoTime() - pass0) / 1e9
+    val setupEnd = System.nanoTime()
+    val setup = jmap("jvm_boot_s" -> bootS, "session_s" -> (sessionEnd - mainNs) / 1e9,
+      "inputs_s" -> (inputsEnd - sessionEnd) / 1e9, "pass_s" -> (setupEnd - inputsEnd) / 1e9,
+      "total_s" -> (bootS + (setupEnd - mainNs) / 1e9))
     val afterSetup = JvmSample.now()
 
     // --- timed closed loop over whole cycles ---
@@ -222,11 +215,13 @@ object Main {
     val loop0 = System.nanoTime()
     def elapsed = (System.nanoTime() - loop0) / 1e9
     var cycle = 0
-    // With tracing, every other operation is traced, alternating by
-    // cycle, so each position of the cycle is measured traced and
-    // untraced, and warm-up between cycles weighs on both sides alike.
-    while (elapsed < seconds || (trace && cycle < 2)) {
-      cycles(cycle % cycles.size).zipWithIndex.foreach { case (id, pos) =>
+    // With tracing, cycles run in pairs over the same variants, and every
+    // other operation is traced, alternating within the pair: each
+    // operation is measured traced and untraced, and warm-up from one
+    // cycle to the next weighs on both sides alike.
+    while (elapsed < seconds || (trace && cycle % 2 == 1)) {
+      val ids = cycles((if (trace) cycle / 2 else cycle) % cycles.size)
+      ids.zipWithIndex.foreach { case (id, pos) =>
         val traced = trace && (pos + cycle) % 2 == 0
         val r = record(spark, in, id, cycle, if (traced) tracer else None)
         r.put("pos", pos)
@@ -253,11 +248,10 @@ object Main {
       "spark_version" -> spark.version,
       "scala_version" -> scala.util.Properties.versionNumberString,
       "master" -> spark.sparkContext.master,
-      "session_conf" -> new java.util.TreeMap[String, String](spark.conf.getAll.asJava),
-      "jvm_start_to_main_s" -> (rt.getUptime / 1000.0 - (System.nanoTime() - mainNs) / 1e9))
+      "session_conf" -> new java.util.TreeMap[String, String](spark.conf.getAll.asJava))
     val out = jmap(
       "env" -> env,
-      "setups" -> setups, "pass_s" -> passS,
+      "setup" -> setup,
       "setup_records" -> setupRecords,
       "jit_compile_s" -> afterSetup.jitMs / 1000.0,
       "code_cache_mb" -> afterSetup.codeCacheBytes / 1e6,

