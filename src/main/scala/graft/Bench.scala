@@ -8,6 +8,15 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // the stdout sidecar (written at the end) is deleted up front, so
+    // a run that dies or fails to write it leaves no earlier run's line
+    // behind to be read as this run's
+    val sidecar = java.nio.file.Paths.get(s"BENCH_stdout_c$cpus.json")
+    try java.nio.file.Files.deleteIfExists(sidecar)
+    catch {
+      case e: java.io.IOException =>
+        System.err.println(s"WARNING: could not delete stale $sidecar: $e")
+    }
     // shuffle/spill on tmpfs when available (static conf — builder
     // only): the whole suite writes ~180 MB of shuffle at sf0.1, and
     // disk-contended shuffle-file fsyncs were a prime suspect in the
@@ -124,9 +133,9 @@ object Bench {
       subset.forall(_.exists(n.contains))
     }
     // Inter-query hygiene: drop whatever the previous query pinned
-    // (GraphX caches vertex/edge RDDs and not all algorithms release
-    // them) so each timing measures the query, not its neighbor's
-    // leftover memory pressure.
+    // (GraphX, which triangleCounts uses, caches vertex/edge RDDs it
+    // never releases) so each timing measures the query, not its
+    // neighbor's leftover memory pressure.
     val doScrub = sys.env.getOrElse("SPARK_GRAFT_SCRUB", "1") != "0"
     def scrub(): Unit = if (doScrub) {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -398,10 +407,11 @@ object Bench {
     // belt-and-braces for the stdout contract: the exact stdout line
     // also lands in a sidecar file, so a truncated/prefixed stdout
     // capture can still be reconciled against a parseable copy
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"BENCH_stdout_c$cpus.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    try java.nio.file.Files.write(sidecar, (line + "\n").getBytes("UTF-8"))
+    catch {
+      case e: Throwable =>
+        System.err.println(s"WARNING: could not write $sidecar: $e")
+    }
     // stop BEFORE the final print: shutdown may log to stderr, and
     // with raw (unbuffered, interleaved) forked output those lines
     // could otherwise land between the JSON line and the driver's

@@ -30,9 +30,10 @@ object Graft {
       // events.parquet carries TIMESTAMP(NANOS); read as long once,
       // globally, instead of per-query conf mutation
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // iterative GraphX (connected components) checkpoints every 10
-      // Pregel rounds so deep components don't accumulate unbounded
-      // lineage (recomputed in full on executor loss at scale)
+      // EdgeGraph's iterative algorithms (graph.Superstep) checkpoint
+      // their loop state every 10 supersteps so deep components don't
+      // accumulate unbounded lineage (recomputed in full on executor
+      // loss at scale)
       .config("spark.graphx.pregel.checkpointInterval", "10")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -278,11 +278,12 @@ object MinHashLSH {
     // REVERTED: at sf0.1 the duplicated signature subtrees are cheap
     // next to the pin's two job barriers (d2 0.92→1.38 s, d10
     // 1.11→1.95 s) and the frozen 32-wide layout leaks into iterative
-    // consumers (c10's GraphX CC: 1.7→6.6 s, iterations × near-empty
-    // tasks). At corpus scale the duplication self-resolves without a
-    // pin: both self-join sides shuffle the IDENTICAL subtree on
-    // (band, bucket), so ReuseExchange evaluates it once — the
-    // duplication is a small-input broadcast artifact only.)
+    // consumers (c10's CC, then GraphX: 1.7→6.6 s, iterations ×
+    // near-empty tasks; CC now sizes its own blocks). At corpus scale
+    // the duplication self-resolves without a pin: both self-join
+    // sides shuffle the IDENTICAL subtree on (band, bucket), so
+    // ReuseExchange evaluates it once — the duplication is a
+    // small-input broadcast artifact only.)
     val kept =
       if (maxBucket <= 0) buckets
       else {

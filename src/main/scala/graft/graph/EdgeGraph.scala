@@ -1,6 +1,5 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Graph => XGraph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,12 +10,38 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §2.3 J4/J9.
   *
   * Node ids are caller-chosen (string-prefix heterogeneous ids or
-  * disjoint long ranges); analytics that need GraphX require long ids.
+  * disjoint long ranges); the graph analytics require long ids.
+  *
+  * The iterative analytics (connected components, shortest paths,
+  * strongly connected components, k-core, label propagation) all run
+  * on one block-local superstep loop, `Superstep`: about one Spark job
+  * per superstep, and a graph under 65 536 edges fits one block, where
+  * CC, shortest paths and k-core finish in a single superstep and SCC
+  * in three per colouring iteration plus a last trim. Each returns a
+  * reliable checkpoint and leaves no cached RDD behind. Only
+  * `triangleCounts` uses GraphX.
   */
 object EdgeGraph {
   def load(spark: SparkSession, path: String,
            src: String = "src", dst: String = "dst"): EdgeGraph =
     new EdgeGraph(spark.read.parquet(path), src, dst)
+
+  /** Partition count for an iteration over `rows` edges: ~64k rows
+    * per partition, capped at the session's
+    * `spark.sql.shuffle.partitions`. An iteration pins its partitioning
+    * for every round, so AQE's post-shuffle coalescing never gets to
+    * fix it, and a small graph at the session's cluster-sized width
+    * pays (rounds × partitions) near-empty tasks per query: pure
+    * scheduler and GC churn (g7 at sf0.1: ~1000 tasks, 15.2 s task
+    * time for 3.2 s CPU, 1.1 s GC, measured). On a big graph the cap
+    * leaves the session value in charge, which is the at-scale
+    * behaviour. `Superstep` takes its block count from here; same
+    * right-size-the-loop contract as `StreamOps.replaySized`.
+    */
+  private[graph] def sizedPartitions(spark: SparkSession, rows: Long): Int = {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    math.max(1L, math.min(width, rows / 65536L + 1L)).toInt
+  }
 
   /** Ensure a checkpoint dir exists for iterative algorithms. A
     * driver-local tmpdir is only a valid checkpoint target in local
@@ -25,27 +50,6 @@ object EdgeGraph {
     * spark.graft.checkpointDir rather than checkpoint somewhere
     * executors can't read.
     */
-  /** Run `body` with `spark.sql.shuffle.partitions` sized to the
-    * iteration's working set (`rows` / ~64k per reduce partition,
-    * capped at the session value), restoring the conf after. Iterative
-    * DataFrame loops persist every round, which PINS partitioning —
-    * AQE's post-shuffle coalescing never gets to fix it — so a small
-    * graph at the session's cluster-sized partition count pays
-    * (stages × rounds × partitions) near-empty tasks per query: pure
-    * scheduler+GC churn (g7 at sf0.1: ~1000 tasks, 15.2 s task time
-    * for 3.2 s CPU, 1.1 s GC — measured). On a big graph the cap
-    * leaves the session value in charge, which is the at-scale
-    * behavior. Same right-size-the-loop contract as
-    * `StreamOps.replaySized`.
-    */
-  private[graph] def sizedShuffle[T](spark: SparkSession, rows: Long)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val parts = math.max(1L, math.min(prev.toLong, rows / 65536L + 1L))
-    spark.conf.set(key, parts.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
   private[graph] def ensureCheckpointDir(spark: SparkSession, who: String): Unit = {
     val sc = spark.sparkContext
     if (sc.getCheckpointDir.isEmpty) {
@@ -56,7 +60,7 @@ object EdgeGraph {
             "set spark.graft.checkpointDir (or SparkContext.setCheckpointDir) " +
             "to a shared filesystem path")
         // local mode: prefer tmpfs — iterative-algorithm checkpoints
-        // are small (peel/CC edge sets) but fsync per round, so on a
+        // are small (superstep loop state) but fsync per round, so on a
         // contended disk they dominate round latency (r7 driver run:
         // g6 10.9 s vs 2 s clean)
         s"${graft.tools.Scratch.fastLocalBase}/graft_ckpt_${sc.applicationId}"
@@ -100,27 +104,19 @@ class EdgeGraph(val edges: DataFrame, src: String = "src", dst: String = "dst") 
   def save(path: String): Unit =
     edges.write.mode("overwrite").parquet(path)
 
-  /** Connected components via GraphX (per the project's
-    * "GraphX for analytics" approach): returns (node, comp) where comp
-    * is the smallest vertex id in the component. Requires long ids.
-    *
-    * Iteration robustness at scale: a checkpoint dir is ensured so
-    * Pregel's periodic checkpointing (`spark.graphx.pregel
-    * .checkpointInterval`, set by `Graft.session`) truncates lineage —
-    * a deep component otherwise re-derives every prior iteration on
-    * executor loss. `maxIterations` bounds runaway convergence on
-    * pathological graphs (diameter ≈ N chains).
+  /** The edges as the (src, dst) long pairs `Superstep` iterates over. */
+  private def longPairs: DataFrame =
+    edges.select(col(src).cast("long"), col(dst).cast("long"))
+
+  /** Connected components: returns (node, comp) where comp is the
+    * smallest vertex id in the (undirected) component, by min-label
+    * propagation to a fixpoint. `maxIterations` bounds supersteps on
+    * pathological graphs (diameter ≈ N chains); a truncated run
+    * returns a coarser labeling. Requires long ids.
     */
   def connectedComponents(spark: SparkSession,
-                          maxIterations: Int = Int.MaxValue): DataFrame = {
-    EdgeGraph.ensureCheckpointDir(spark, "connectedComponents")
-    val pairs = edges
-      .select(col(src).cast("long"), col(dst).cast("long"))
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val cc = XGraph.fromEdgeTuples(pairs, defaultValue = 1)
-      .connectedComponents(maxIterations).vertices
-    spark.createDataFrame(cc).toDF("node", "comp")
-  }
+                          maxIterations: Int = Int.MaxValue): DataFrame =
+    Superstep.connectedComponents(spark, longPairs, maxIterations)
 
   /** Per-node triangle participation counts via GraphX TriangleCount.
     * Edges are canonicalized (src<dst, self-loops dropped, deduped)
@@ -130,7 +126,7 @@ class EdgeGraph(val edges: DataFrame, src: String = "src", dst: String = "dst") 
     * engine-deterministic despite the distributed intersection order.
     */
   def triangleCounts(spark: SparkSession): DataFrame = {
-    import org.apache.spark.graphx.PartitionStrategy
+    import org.apache.spark.graphx.{Graph => XGraph, PartitionStrategy}
     val pairs = edges
       .select(col(src).cast("long").as("s"), col(dst).cast("long").as("d"))
       .where(col("s") =!= col("d"))
@@ -144,192 +140,66 @@ class EdgeGraph(val edges: DataFrame, src: String = "src", dst: String = "dst") 
       .select(col("node"), col("n_tri").cast("long").as("n_triangles"))
   }
 
-  /** Hop distances from a set of landmark nodes (Pregel BFS) — the
+  /** Hop distances from a set of landmark nodes (BFS) — the
     * multi-source traversal query of the reference's graph surface
     * (pygr `graphquery.py` walks / `mapping.py` BFS-ish iteration),
-    * in its scalable form: one Pregel superstep per hop, messages
-    * only along frontier edges, no all-pairs anything. Distances
-    * follow edge direction (node → … → landmark, the GraphX
-    * ShortestPaths convention); pass `undirected` edges for the
-    * symmetric metric. Results are exact integer hop counts —
-    * deterministic regardless of message order.
-    *
-    * Hand-rolled Pregel (same vertex program as GraphX's
-    * lib.ShortestPaths) so `maxDist` can be passed as Pregel's
-    * maxIterations: BFS layer d is final after superstep d, so the
-    * cap genuinely bounds supersteps on a high-diameter graph —
-    * lib.ShortestPaths always runs to full convergence and a
-    * post-filter would only trim output. The cap also keeps vertex
-    * state at |landmarks| entries.
+    * in its scalable form: messages only along cross-block edges, no
+    * all-pairs anything. Distances follow edge direction (node → … →
+    * landmark, the GraphX ShortestPaths convention); pass `undirected`
+    * edges for the symmetric metric. Results are exact integer hop
+    * counts — deterministic regardless of message order. No distance
+    * is propagated past `maxDist`, so the cap bounds the work on a
+    * high-diameter graph and keeps vertex state at |landmarks| entries.
     *
     * Returns (node, landmark, dist) for every reachable pair with
     * dist <= maxDist.
     */
   def shortestPaths(spark: SparkSession, landmarks: Seq[Long],
-                    maxDist: Int = Int.MaxValue): DataFrame = {
-    import org.apache.spark.graphx.{EdgeTriplet, Pregel, VertexId}
-    type SPMap = Map[VertexId, Int]
-    def addMaps(a: SPMap, b: SPMap): SPMap =
-      (a.keySet ++ b.keySet).iterator
-        .map(k => k -> math.min(a.getOrElse(k, Int.MaxValue),
-                                b.getOrElse(k, Int.MaxValue)))
-        .toMap
-    val lm = landmarks.toSet
-    val pairs = edges
-      .select(col(src).cast("long"), col(dst).cast("long"))
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val g = XGraph.fromEdgeTuples(pairs, defaultValue = 1)
-      .mapVertices((vid, _) =>
-        if (lm.contains(vid)) Map(vid -> 0) else Map.empty[VertexId, Int])
-    def send(e: EdgeTriplet[SPMap, Int]): Iterator[(VertexId, SPMap)] = {
-      val fromDst = e.dstAttr.map { case (k, v) => k -> (v + 1) }
-      if (e.srcAttr != addMaps(fromDst, e.srcAttr)) Iterator((e.srcId, fromDst))
-      else Iterator.empty
-    }
-    val sp = Pregel(g, Map.empty[VertexId, Int], maxIterations = maxDist)(
-        (_, attr, msg) => addMaps(attr, msg), send, addMaps).vertices
-      .flatMap { case (node, m) =>
-        m.iterator.collect { case (l, d) if d <= maxDist => (node, l, d.toLong) }
-      }
-    spark.createDataFrame(sp).toDF("node", "landmark", "dist")
-  }
+                    maxDist: Int = Int.MaxValue): DataFrame =
+    Superstep.shortestPaths(spark, longPairs, landmarks, maxDist)
 
-  /** Strongly connected components via GraphX (directed reachability
-    * equivalence — the missing directed twin of connectedComponents):
+  /** Strongly connected components (directed reachability
+    * equivalence — the directed twin of connectedComponents) by
+    * forward-backward colouring with trimming, GraphX's algorithm:
     * returns (node, scc) with scc = the smallest vertex id in the
     * component; acyclic nodes are singletons. `numIter` bounds the
-    * peel/propagate rounds — size it above the graph's SCC diameter
+    * iterations as in GraphX (each trims, all but the last also
+    * colour) — size it above the depth of the component DAG
     * (the oracle gate catches an undersized bound as a wrong result,
-    * not a hang). Checkpointing contract as connectedComponents.
+    * not a hang); an unresolved node keeps its own id.
     */
-  def stronglyConnected(spark: SparkSession, numIter: Int = 20): DataFrame = {
-    EdgeGraph.ensureCheckpointDir(spark, "stronglyConnected")
-    val pairs = edges
-      .select(col(src).cast("long"), col(dst).cast("long"))
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val scc = XGraph.fromEdgeTuples(pairs, defaultValue = 1)
-      .stronglyConnectedComponents(numIter).vertices
-    spark.createDataFrame(scc).toDF("node", "scc")
-  }
+  def stronglyConnected(spark: SparkSession, numIter: Int = 20): DataFrame =
+    Superstep.stronglyConnected(spark, longPairs, numIter)
 
   /** Community detection by label propagation (Raghavan et al. 2007)
     * in its deterministic synchronous form: every node starts with its
     * own id as label; each round, every node simultaneously adopts the
-    * most frequent label among its (undirected) neighbors, ties broken
-    * toward the smallest label. `rounds` is fixed by the caller — LPA
-    * has no monotone convergence guarantee (synchronous updates can
-    * 2-cycle on bipartite structures), so a pinned round count is the
-    * reproducible contract, matching how the reference iterates its
-    * graph updates a fixed number of steps.
-    *
-    * Scale design: one round = one join (shuffle keyed on the
-    * neighbor id) + one (node,label) count aggregate + one argmax
-    * aggregate keyed on the node — all map-side combinable, nothing
-    * quadratic, no window over an unbounded partition (the argmax is
-    * `min(struct(-count, label))`, not a row_number sort). Each
-    * round's label set is persisted and the previous one released, so
-    * round r costs one pass over E, not r passes of lineage.
+    * most frequent label among its (undirected, deduplicated)
+    * neighbors, ties broken toward the smallest label; a self-loop
+    * makes a node its own neighbor. `rounds` is fixed by the caller —
+    * LPA has no monotone convergence guarantee (synchronous updates
+    * can 2-cycle on bipartite structures), so a pinned round count is
+    * the reproducible contract, matching how the reference iterates
+    * its graph updates a fixed number of steps. One round is one
+    * superstep; a round that changes no label ends the loop early,
+    * since every later round would repeat it.
     *
     * Returns (node, label). Requires long ids.
     */
-  def labelPropagation(spark: SparkSession, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"labelPropagation: rounds must be >= 1, got $rounds")
-    EdgeGraph.ensureCheckpointDir(spark, "labelPropagation")
-    val ue = undirected
-      .select(col(src).cast("long").as("node"), col(dst).cast("long").as("nbr"))
-      .persist()
-    val eCount = ue.count()
-    EdgeGraph.sizedShuffle(spark, eCount) {
-      var labels = ue.select(col("node")).distinct()
-        .withColumn("label", col("node")).persist()
-      labels.count()
-      for (_ <- 1 to rounds) {
-        val next = ue
-          .join(labels.select(col("node").as("nbr"), col("label")), "nbr")
-          .groupBy("node", "label").agg(count(lit(1)).as("c"))
-          .groupBy("node")
-          .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
-          .select(col("node"), col("m.l").as("label"))
-          .persist()
-        next.count()
-        labels.unpersist()
-        labels = next
-      }
-      ue.unpersist()
-      // hand back a checkpoint-backed result and release the loop cache
-      // (same leak-avoidance contract as kCore)
-      val out = labels.checkpoint()
-      labels.unpersist()
-      out
-    }
-  }
+  def labelPropagation(spark: SparkSession, rounds: Int): DataFrame =
+    Superstep.labelPropagation(spark, longPairs, rounds)
 
   /** k-core: the maximal induced subgraph in which every node has
-    * undirected degree >= k, by synchronous iterative peeling
-    * (each round simultaneously drops all nodes whose degree within
-    * the current subgraph is < k — Matula–Beck 1983). Returns
+    * undirected degree >= k (a self-loop counts once), by peeling
+    * nodes of lower degree to a fixpoint (Matula–Beck 1983). Returns
     * (node, deg) for core members with their degree INSIDE the core.
+    * Each block peels to its local fixpoint within a superstep, so the
+    * superstep count is at most the synchronous peel depth.
     *
-    * Scale design: every round is one keyed aggregate (degrees) plus
-    * two semi-joins, all shuffles keyed on the node id, and the
-    * working edge set only shrinks — there is no per-node sequential
-    * peel (the classic O(E) heap algorithm is inherently serial; the
-    * synchronous-round form is the distributed equivalent and needs
-    * O(peel depth) rounds, tens on real graphs). ONE peel round per
-    * materialized action — already the minimum: the count that
-    * materializes the persisted round IS the convergence check, so
-    * there is no separate detection action to fold away. Fusing two
-    * peel rounds per action was tried (r8) and MEASURED 4× SLOWER
-    * (7.8 s vs 2.0 s at sf0.1, 49 s task-CPU vs ~12 s): the fused
-    * job's intermediate edge set is not materialized, so its degree
-    * aggregate and both semi-join branches recompute it inside the
-    * same job — halving driver actions at the price of ~3× executor
-    * work. Each round's edge set is persisted and the previous one
-    * unpersisted, so a round costs one pass over current edges, not
-    * its lineage; every 5th round is a reliable checkpoint (same
-    * `spark.graft.checkpointDir` contract as connectedComponents) so
-    * neither the logical plan nor the recovery lineage grows with
-    * round count.
-    *
-    * Throws if `maxRounds` is hit before the peel reaches its
+    * Throws if `maxRounds` supersteps end before the peel reaches its
     * fixpoint — a truncated peel is NOT a k-core, so fail loudly
     * rather than return a superset.
     */
-  def kCore(spark: SparkSession, k: Int, maxRounds: Int = 50): DataFrame = {
-    require(k >= 1, s"kCore: k must be >= 1, got $k")
-    EdgeGraph.ensureCheckpointDir(spark, "kCore")
-    def peel(e: DataFrame): DataFrame = {
-      val alive = e.groupBy("a").agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k).select("a")
-      e.join(alive, Seq("a"), "left_semi")
-        .join(alive.select(col("a").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-    }
-    var ue = undirected.select(col(src).as("a"), col(dst).as("b")).persist()
-    var nEdges = ue.count()
-    EdgeGraph.sizedShuffle(spark, nEdges) {
-      var round = 0
-      var converged = nEdges == 0L
-      while (!converged && round < maxRounds) {
-        val next0 = peel(ue)
-        round += 1
-        val next = if (round % 5 == 0) next0.checkpoint() else next0.persist()
-        val m = next.count()
-        ue.unpersist()
-        converged = m == nEdges || m == 0L
-        nEdges = m
-        ue = next
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"kCore: peel did not converge within $maxRounds rounds " +
-            s"($nEdges edges still shrinking); raise maxRounds")
-      // hand the caller a checkpoint-backed result and release the
-      // loop's cache — otherwise every kCore call leaks one persisted
-      // edge set into the block manager for the session's lifetime
-      val core = ue.checkpoint()
-      ue.unpersist()
-      core.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-    }
-  }
+  def kCore(spark: SparkSession, k: Int, maxRounds: Int = 50): DataFrame =
+    Superstep.kCore(spark, longPairs, k, maxRounds)
 }

@@ -92,7 +92,7 @@ object MotifQuery {
     * `rowsHint` (optional, 0 = off): an UPPER BOUND on the edge count,
     * used to size the pinned edge set's partition count as
     * min(session shuffle partitions, rows/65536 + 1) — the
-    * `EdgeGraph.sizedShuffle` contract. Without it the pin runs at the
+    * `EdgeGraph.sizedPartitions` contract. Without it the pin runs at the
     * session width even when the edge set is tiny, and every
     * downstream stage pays (width × first-pass-JIT) task-CPU for work
     * that fits in a handful of partitions (suite-context j5 at sf0.1:

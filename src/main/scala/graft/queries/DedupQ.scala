@@ -358,7 +358,7 @@ object DedupQ {
     // d6: semantic dedup CLUSTERS — near-dup pairs unioned into
     // connected components (what a pipeline actually drops on: each
     // cluster keeps one representative, the min id = the component
-    // label). GraphX CC over the d4 pair graph.
+    // label). EdgeGraph CC over the d4 pair graph.
     "d6_embed_clusters" -> { (s, dir) =>
       val pairs = embNeardupPairs(s, dir)
         .select(col("i").as("src"), col("j").as("dst"))

@@ -19,8 +19,8 @@ import graft.graph.{EdgeGraph, MotifEdge, MotifQuery}
   *
   * Covers SURVEY.md J4 (adjacency), J5 (subgraph isomorphism), J6
   * (attribute edge sources), U2 (motif union), A9 (splice-graph-style
-  * exact-coordinate construction), plus GraphX analytics (degrees,
-  * connected components).
+  * exact-coordinate construction), plus graph analytics (degrees,
+  * components, paths, cores, communities).
   */
 object GraphQ {
 
@@ -211,14 +211,14 @@ object GraphQ {
       fwd.unionByName(inv).orderBy("side", "key")
     },
 
-    // GraphX analytics: degrees.
+    // Graph analytics: degrees.
     "g2_degrees" -> { (s, dir) =>
       new EdgeGraph(suppPartEdges(s, dir)).outDegrees
         .select(col("node").as("suppkey"), col("out_deg"))
         .orderBy("suppkey")
     },
 
-    // GraphX analytics: connected components on the sparse subgraph.
+    // Graph analytics: connected components on the sparse subgraph.
     "g1_connected_components" -> { (s, dir) =>
       new EdgeGraph(sparseEdges(s, dir)).connectedComponents(s)
         .orderBy("node")
@@ -252,7 +252,7 @@ object GraphQ {
     },
 
     // g9: strongly connected components — directed reachability
-    // equivalence (the directed twin of g1; GraphX SCC). The edge
+    // equivalence (the directed twin of g1; EdgeGraph SCC). The edge
     // set folds part ids into the supplier id space (mod 50) so
     // directed CYCLES exist: supplier→part edges whose target is
     // itself a supplier id close the loop. Oracle = transitive
@@ -325,7 +325,7 @@ object GraphQ {
     // aggregate on dst — the standard shuffle shape; iterations
     // compose without caching pitfalls because each is a pure
     // DataFrame transform (a production run would persist between
-    // rounds and use GraphX/Pregel for many iterations).
+    // rounds and use a superstep loop for many iterations).
     "g3_pagerank" -> { (s, dir) =>
       val e = suppPartEdges(s, dir)
       val nodes = e.select(col("src").as("node"))
@@ -465,10 +465,10 @@ object GraphQ {
     // smallest node ids) on the undirected sparse graph — the graph
     // TRAVERSAL query of the reference's surface (pygr graph walks
     // answer "what is reachable, how far"), in its distributed form:
-    // GraphX Pregel BFS, one superstep per hop, messages only on the
-    // frontier. The landmark fetch is a 3-row TakeOrdered (constant
-    // driver traffic at any scale); the oracle is a depth-capped
-    // recursive CTE over the same edges.
+    // block-local BFS (EdgeGraph.shortestPaths), messages only along
+    // cross-block edges. The landmark fetch is a 3-row TakeOrdered
+    // (constant driver traffic at any scale); the oracle is a
+    // depth-capped recursive CTE over the same edges.
     "g5_shortest_paths" -> { (s, dir) =>
       val und = new EdgeGraph(sparseEdges(s, dir)).undirected
       val lms = und.select(col("src").cast("long")).distinct()
@@ -688,6 +688,10 @@ object GraphQ {
         |SELECT node, COUNT(*) AS n_triangles FROM n
         |GROUP BY node ORDER BY node""".stripMargin,
 
+    // The undirected edge sets (`ud`) and node sets (`nodes`) of the
+    // recursive oracles are SELECT DISTINCT over UNION ALL: inside WITH
+    // RECURSIVE, DuckDB 1.0 keeps duplicate rows of a plain UNION CTE.
+    //
     // The recursive term sees only the PREVIOUS iteration's rows (the
     // recursive working table), so iteration i holds the degrees of
     // round-(i-1) survivors within the subgraph they induce; selecting
@@ -698,7 +702,8 @@ object GraphQ {
       """WITH RECURSIVE e AS (
         |  SELECT DISTINCT l_suppkey AS a, l_partkey + 1000000 AS b
         |  FROM lineitem WHERE l_quantity <= 3),
-        |ud AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
+        |ud AS (SELECT DISTINCT a, b FROM (
+        |  SELECT a, b FROM e UNION ALL SELECT b, a FROM e) u),
         |alive(iter, node, deg) AS (
         |  SELECT 0, a, CAST(COUNT(*) AS BIGINT) FROM ud GROUP BY a
         |  UNION ALL
@@ -716,7 +721,8 @@ object GraphQ {
       """WITH RECURSIVE e AS (
         |  SELECT DISTINCT l_suppkey AS a, l_partkey + 1000000 AS b
         |  FROM lineitem WHERE l_quantity = 1 AND l_linenumber = 1),
-        |ud AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
+        |ud AS (SELECT DISTINCT a, b FROM (
+        |  SELECT a, b FROM e UNION ALL SELECT b, a FROM e) u),
         |nodes AS (SELECT DISTINCT a AS n FROM ud),
         |walk(n, lbl) AS (
         |  SELECT n, n FROM nodes
@@ -739,7 +745,8 @@ object GraphQ {
       """WITH RECURSIVE e AS (
         |  SELECT DISTINCT l_suppkey AS a, l_partkey % 50 AS b
         |  FROM lineitem WHERE l_suppkey <> l_partkey % 50),
-        |nodes AS (SELECT a AS n FROM e UNION SELECT b FROM e),
+        |nodes AS (SELECT DISTINCT n FROM (
+        |  SELECT a AS n FROM e UNION ALL SELECT b FROM e) u),
         |walk(a, b) AS (
         |  SELECT a, b FROM e
         |  UNION
@@ -758,7 +765,8 @@ object GraphQ {
         |    l_partkey % 50 + (l_suppkey // 10000) * 10000 AS b
         |  FROM lineitem
         |  WHERE l_suppkey <> l_partkey % 50 + (l_suppkey // 10000) * 10000),
-        |nodes AS (SELECT a AS n FROM e UNION SELECT b FROM e),
+        |nodes AS (SELECT DISTINCT n FROM (
+        |  SELECT a AS n FROM e UNION ALL SELECT b FROM e) u),
         |walk(a, b) AS (
         |  SELECT a, b FROM e
         |  UNION
@@ -804,7 +812,8 @@ object GraphQ {
       """WITH RECURSIVE e AS (
         |  SELECT DISTINCT l_suppkey AS a, l_partkey + 1000000 AS b
         |  FROM lineitem WHERE l_quantity = 1 AND l_linenumber = 1),
-        |ud AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
+        |ud AS (SELECT DISTINCT a, b FROM (
+        |  SELECT a, b FROM e UNION ALL SELECT b, a FROM e) u),
         |nodes AS (SELECT DISTINCT a AS n FROM ud),
         |lm AS (SELECT n AS l FROM nodes ORDER BY n LIMIT 3),
         |walk(n, l, d) AS (

@@ -77,7 +77,7 @@ object StreamOps {
 
   /** State partition count for a replay of `n` rows — `waveCount`'s
     * store-count sibling, and the same right-size-the-loop contract
-    * as `EdgeGraph.sizedShuffle`. A stateful operator instantiates
+    * as `EdgeGraph.sizedPartitions`. A stateful operator instantiates
     * (and commits, EVERY micro-batch) one state store per shuffle
     * partition per internal store type — a stream-stream join holds
     * four per partition — and with the r18 checksum fix the per-store

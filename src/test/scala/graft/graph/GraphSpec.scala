@@ -149,21 +149,60 @@ class GraphSpec extends SparkSuite {
   }
 
   test("connected components on a deep chain checkpoints lineage") {
-    // a 40-node path has diameter ≈ iteration count — the worst case
-    // for Pregel lineage depth; interval=5 (SparkSuite conf) must
-    // produce actual checkpoint data and still converge to one comp
+    // a 40-node path at 4 blocks: consecutive ids hash to different
+    // blocks, so every hop crosses blocks and the loop runs ~40
+    // supersteps — the worst case for lineage depth. interval=5
+    // (SparkSuite conf) must cut it with loop checkpoints beyond the
+    // one the result is read from, and still converge to one comp.
+    val key = "spark.graphx.pregel.checkpointInterval"
+    assert(spark.conf.get(key) === "5")
     val chain = edgesDF((0L until 39L).map(i => (i, i + 1)): _*)
-    val eg = new EdgeGraph(chain)
-    val cc = eg.connectedComponents(spark).collect()
+    def ckptRdds(): Set[String] = spark.sparkContext.getCheckpointDir.toSet
+      .flatMap((d: String) => Option(new java.io.File(new java.net.URI(d)).list()).toSeq.flatten)
+    EdgeGraph.ensureCheckpointDir(spark, "GraphSpec")
+    val before = ckptRdds()
+    val cc = Superstep.connectedComponents(spark, chain, blocks = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(cc.size === 40)
     assert(cc.values.toSet === Set(0L))
-    val ckptDir = spark.sparkContext.getCheckpointDir
-    assert(ckptDir.isDefined, "connectedComponents must ensure a checkpoint dir")
-    val files = new java.io.File(new java.net.URI(ckptDir.get))
-    assert(files.exists && files.listFiles().nonEmpty,
-      "deep chain with checkpointInterval=5 should have written checkpoint data")
-    // bounded iteration cap still returns a labeling (possibly coarser)
-    assert(eg.connectedComponents(spark, maxIterations = 3).count() === 40L)
+    val written = ckptRdds() -- before
+    assert(written.size > 1,
+      s"deep chain with checkpointInterval=5 should have written loop checkpoints: $written")
+    // a bounded superstep cap still returns a labeling, and a coarser one
+    val capped = Superstep.connectedComponents(spark, chain, maxIterations = 3, blocks = 4)
+      .collect().map(r => r.getLong(1)).toSeq
+    assert(capped.size === 40)
+    assert(capped.toSet.size > 1)
+  }
+
+  test("a changed vertex reaches every block that mirrors it") {
+    // at 3 blocks, 3 and 6 share block 0 while 7 and 8 sit in blocks 1
+    // and 2. Vertex 6 learns its value from 3 inside block 0, then must
+    // ship it to both mirror blocks: dropping either leaves 7 or 8 stale.
+    assert(Seq(3L, 6L, 7L, 8L).map(Superstep.blockOf(_, 3)) === Seq(0, 0, 1, 2))
+    val e = edgesDF((6L, 3L), (7L, 6L), (8L, 6L))
+    val cc = Superstep.connectedComponents(spark, e, blocks = 3).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc === Map(3L -> 3L, 6L -> 3L, 7L -> 3L, 8L -> 3L))
+    val dist = Superstep.shortestPaths(spark, e, Seq(3L), blocks = 3).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(dist === Map(3L -> 0L, 6L -> 1L, 7L -> 2L, 8L -> 2L))
+  }
+
+  test("iterative algorithms release every cached RDD") {
+    // GraphX's CC and SCC used to leave cached vertex/edge RDDs behind
+    val e = edgesDF((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L), (10L, 11L))
+    val eg = new EdgeGraph(e)
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "connectedComponents" -> (() => eg.connectedComponents(spark)),
+      "shortestPaths" -> (() => eg.shortestPaths(spark, Seq(1L, 4L))),
+      "stronglyConnected" -> (() => eg.stronglyConnected(spark)),
+      "kCore" -> (() => eg.kCore(spark, k = 2)),
+      "labelPropagation" -> (() => eg.labelPropagation(spark, rounds = 2)))
+    for ((name, call) <- calls) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      call().count()
+      assert(spark.sparkContext.getPersistentRDDs.keySet === before, name)
+    }
   }
 }

@@ -58,4 +58,22 @@ class LabelPropagationSpec extends SparkSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(scc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L))
   }
+
+  test("stronglyConnected matches GraphX at a tight numIter, at every block count") {
+    // 5→1→3⇄4: GraphX trims 5 and 1 to a fixpoint before it colours, so
+    // 1's colour must never reach 3 and 4. numIter=1 only trims, which
+    // leaves the cycles 3⇄4 and 7⇄8 unresolved; the one colouring round
+    // of numIter=2 resolves both.
+    val es = Seq((5L, 1L), (1L, 3L), (3L, 4L), (4L, 3L), (7L, 8L), (8L, 7L))
+    def graphx(numIter: Int): Map[Long, Long] =
+      org.apache.spark.graphx.Graph.fromEdgeTuples(spark.sparkContext.parallelize(es), 0)
+        .stronglyConnectedComponents(numIter).vertices.collect().toMap
+    assert(graphx(1) === Map(5L -> 5L, 1L -> 1L, 3L -> 3L, 4L -> 4L, 7L -> 7L, 8L -> 8L))
+    assert(graphx(2) === Map(5L -> 5L, 1L -> 1L, 3L -> 3L, 4L -> 3L, 7L -> 7L, 8L -> 7L))
+    for (numIter <- 1 to 3; blocks <- 1 to 4) {
+      val got = Superstep.stronglyConnected(spark, edgesDF(es: _*), numIter, blocks).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === graphx(numIter), s"numIter=$numIter blocks=$blocks")
+    }
+  }
 }
