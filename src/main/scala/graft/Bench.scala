@@ -1,13 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.tools.{HostStats, TaskMetricsListener}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // the stdout sidecar (written at the end) is deleted up front, so
     // a run that dies or fails to write it leaves no earlier run's line
     // behind to be read as this run's
@@ -17,55 +15,20 @@ object Bench {
       case e: java.io.IOException =>
         System.err.println(s"WARNING: could not delete stale $sidecar: $e")
     }
-    // shuffle/spill on tmpfs when available (static conf — builder
-    // only): the whole suite writes ~180 MB of shuffle at sf0.1, and
-    // disk-contended shuffle-file fsyncs were a prime suspect in the
-    // r7 driver-run regressions. Scratch guards free space and cleans
-    // up at exit; SPARK_GRAFT_LOCAL_DIR overrides, "disk" disables.
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR") match {
-      case Some("disk") => None
-      case Some(d)      => Some(d)
-      case None         => graft.tools.Scratch.tmpfsDir("graft_local_")
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // partition count must scale with DATA, not stay pinned to the
-      // local core count: a 10×-the-gate run at 32 partitions gives
-      // every reduce task 10× the rows and the map-side partial aggs
-      // 10× the groups — hash maps overflow to sort+spill and CPU
-      // bends superlinear (j5 at sf1: 6.7 GB spill, 19.6× CPU for 10×
-      // data; 0 spill and ~linear with partitions sized to the SF).
-      // On a real cluster more data comes with more executors and a
-      // proportionally larger partition count — weak scaling. The
-      // override lets scale sweeps model that on fixed hardware;
-      // default stays = cores for the sf0.1 gate.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graphx.pregel.checkpointInterval", "10")
-      // 156 queries × many codegen units each thrash the default
-      // 100-entry generated-class cache, so late-order queries re-pay
-      // codegen for shared plan fragments — the r6 full-suite runs
-      // showed fixed-size queries drifting 2-4× run-to-run from
-      // exactly this (w2c: 2.5 s → 9.0 s with unchanged code). Size
-      // the cache to the suite.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // AQE coalesce minPartitionSize: Spark's default (1 MB) STANDS.
-      // r18 shipped a 256 kb floor here to widen compute-dense
-      // byte-small stages; the r18 driver measurement (cold JVM, full
-      // suite, local[32], sf0.1) showed it regresses the canonical
-      // config — 215→324 s wall, 208→1241 task-CPU s — because every
-      // first-pass stage then runs its interpreted/uncompiled code
-      // 32-wide, multiplying warm-up CPU by the width (VERDICT r18).
-      // The solo REPEAT=3 "task-CPU flat" evidence measured steady
-      // state, which the single-pass driver methodology never reaches.
-      // The env override remains for A/B sweeps only; unset = Spark
-      // default.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1mb"))
+    // Graft.session is the engine's one session definition (tmpfs
+    // scratch, codegen cache, shuffle partitions = cores, ...); a
+    // `-Dspark.*` property in SPARK_GRAFT_JAVA_OPTS overrides any of
+    // its defaults. Partition count must scale with DATA, not stay
+    // pinned to the local core count: a 10×-the-gate run at 32
+    // partitions gives every reduce task 10× the rows and the map-side
+    // partial aggs 10× the groups — hash maps overflow to sort+spill
+    // and CPU bends superlinear (j5 at sf1: 6.7 GB spill, 19.6× CPU
+    // for 10× data; 0 spill and ~linear with partitions sized to the
+    // SF). Scale sweeps model that weak scaling on fixed hardware with
+    // -Dspark.sql.shuffle.partitions; the sf0.1 gate keeps = cores.
+    // AQE's coalesce minPartitionSize stays at Spark's 1 MB default:
+    // r18's 256 kb floor regressed the canonical config 215→324 s
+    // wall, 208→1241 task-CPU s (VERDICT r18).
     // (measured non-lever: lowering spark.sql.files.maxPartitionBytes
     // to 8 MB left task counts unchanged — the driver-written sf
     // tables are single-row-group files and parquet splits cannot
@@ -73,18 +36,7 @@ object Bench {
     // fixture layout, not a conf. A real corpus has many files/row
     // groups; forcing a repartition before the per-row hash stages
     // would add a full-corpus shuffle that is wrong at scale.)
-    // SPARK_GRAFT_CONF="key=value;key=value" — extra session confs for
-    // targeted experiments (e.g. AQE advisory sizes in scale sweeps)
-    val builder1 = sys.env.get("SPARK_GRAFT_CONF").map(_.split(";").toSeq)
-      .getOrElse(Nil).foldLeft(builder0) { (b, kv) =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => b.config(k.trim, v.trim)
-          case _ => b
-        }
-      }
-    val spark = localDir.fold(builder1)(d => builder1.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session(cores = cpus)
     // Per-query engine metrics (GC/spill/shuffle) — the r7 round proved
     // a bare wall-clock number cannot be adjudicated when two runs of
     // identical code disagree 2.7×; these counters plus the host

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Graft.table
+import graft.core.Graft.{rowCount, table}
 import graft.graph.{EdgeGraph, MotifEdge, MotifQuery}
 
 /** Graph operators over testdata-derived edge tables.
@@ -120,7 +120,7 @@ object GraphQ {
       val sn = table(s, dir, "supplier").select(
         col("s_suppkey").as("src"), (col("s_nationkey") + 2 * POFF).as("dst"))
       val coloc = MotifQuery.sharedNeighbors(sn, chunkSize = 256,
-          rowsHint = table(s, dir, "supplier").count())
+          rowsHint = rowCount(s, dir, "supplier"))
         .select("s1", "s2")
       shared.union(coloc).distinct().orderBy("s1", "s2")
     },

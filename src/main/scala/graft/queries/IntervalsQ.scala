@@ -23,16 +23,16 @@ import graft.operators.{Coverage, IntervalJoin, Sessionize}
   */
 object IntervalsQ {
 
-  /** events with `ts` normalized to epoch NANOS as a Long, whatever
-    * session reads it. The driver data stores ts as parquet
-    * TIMESTAMP(NANOS); under `spark.sql.legacy.parquet.nanosAsLong`
-    * (which `Graft.session`/Bench set AT BUILD TIME — measured on
-    * 4.1.2: setting it at runtime does NOT change schema inference,
-    * the old runtime guard here was a silent no-op) it arrives as the
-    * Long we want. A foreign session without the builder conf reads
-    * TIMESTAMP_NTZ instead; that branch renormalizes via
-    * `unix_micros` ×1000 — exact integer math (the reader already
-    * truncated nanos→micros, and floor(floor(n/1e3)·1e3/1e9) =
+  /** events with `ts` normalized to epoch NANOS as a Long, whichever
+    * of the two encodings the table carries. A parquet
+    * TIMESTAMP(NANOS) ts arrives as that Long under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which `Graft.session`
+    * sets when it builds the session (measured on 4.1.2: setting it
+    * at runtime does NOT change schema inference). A TIMESTAMP(MICROS)
+    * ts — the sf0.001–sf0.1 test tables are written that way, not
+    * adjusted to UTC — reads as TIMESTAMP_NTZ under every session, so
+    * both branches are live; this one renormalizes via `unix_micros`
+    * ×1000 — exact integer math (floor(floor(n/1e3)·1e3/1e9) =
     * floor(n/1e9), so every downstream `div 1000000000` agrees
     * between the two branches). Double arithmetic would lose
     * precision at 1e18; none is used.

@@ -4,7 +4,6 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew-bound measurement for the salted operators (VERDICT r14 #7):
@@ -27,6 +26,8 @@ import org.apache.spark.sql.functions._
   * reduce-row skew is not where that operator's ceiling lives.
   *
   * Usage: runMain graft.tools.SkewProbe [sfDir] [nKeys] [buckets]
+  * (SKEW_r15.json ran at 64 shuffle partitions:
+  * SPARK_GRAFT_JAVA_OPTS=-Dspark.sql.shuffle.partitions=64)
   * Prints one JSON line: per-variant {tasks, rows_max, rows_mean,
   * max_over_mean, hot_key_share}.
   */
@@ -51,17 +52,10 @@ object SkewProbe {
     val sfDir = args.headOption.getOrElse("/root/repo/localdata/v2sf1")
     val nKeys = args.lift(1).map(_.toLong).getOrElse(1024L)
     val buckets = args.lift(2).map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.Graft.session("skew-probe", cores = cpus)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
     val probe = new TaskRows
     spark.sparkContext.addSparkListener(probe)
 

@@ -110,7 +110,6 @@ class IntegrationSpec extends SparkSuite {
     val dir = "/root/testdata/sf0.001"
     val got = SparkEntry.queries("x2_approx_distinct")(spark, dir).collect()
       .map(r => (r.getString(0), (r.getLong(2), r.getBoolean(3)))).toMap
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val exact = spark.read.parquet(s"$dir/events.parquet")
       .groupBy("event_type")
       .agg(org.apache.spark.sql.functions.countDistinct("user_id").as("u"))
@@ -132,7 +131,6 @@ class IntegrationSpec extends SparkSuite {
   // re-derive the constants only after explaining the change.
   test("x2 HLL estimates are pinned (engine-deterministic)") {
     import org.apache.spark.sql.functions.approx_count_distinct
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val got = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
       .groupBy("event_type")
       .agg(approx_count_distinct("user_id", rsd = 0.02).as("a"))

@@ -3,13 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One local session per suite. */
+import graft.core.Graft
+
+/** Every suite shares one local session, built by the engine's own
+  * factory: the tests run under the same configuration as Bench and
+  * Verify, whichever suite happens to start the JVM's session. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.graphx.pregel.checkpointInterval", "5")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkSuite.spark
+}
+
+object SparkSuite {
+  lazy val spark: SparkSession = Graft.session("graft-test", cores = 4)
 }

@@ -24,11 +24,7 @@ object SliceProps extends Properties("graft.slice") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.SparkSuite.spark
 
   // dest pool overlaps the src pool so two-hop self-matches occur and
   // the reference's keep-if `target_id != id or istart != start2`

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Graft
 
 /** The FOREIGN writer of the cross-JVM catalog race tests: a real
   * second process running the real `Catalog.register` code path — no
@@ -13,12 +13,7 @@ import org.apache.spark.sql.SparkSession
 object CatalogWriterMain {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: CatalogWriterMain <warehouseDir> <name>")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("catalog-writer", cores = 2)
     new Catalog(spark, args(0))
       .register(Resource(args(1), "table", "parquet", "/tmp/foreign"))
     spark.stop()

@@ -151,18 +151,21 @@ class GraphSpec extends SparkSuite {
   test("connected components on a deep chain checkpoints lineage") {
     // a 40-node path at 4 blocks: consecutive ids hash to different
     // blocks, so every hop crosses blocks and the loop runs ~40
-    // supersteps — the worst case for lineage depth. interval=5
-    // (SparkSuite conf) must cut it with loop checkpoints beyond the
-    // one the result is read from, and still converge to one comp.
+    // supersteps — the worst case for lineage depth. interval=5 (set
+    // here for this test, restored after) must cut it with loop
+    // checkpoints beyond the one the result is read from, and still
+    // converge to one comp.
     val key = "spark.graphx.pregel.checkpointInterval"
-    assert(spark.conf.get(key) === "5")
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "5")
     val chain = edgesDF((0L until 39L).map(i => (i, i + 1)): _*)
     def ckptRdds(): Set[String] = spark.sparkContext.getCheckpointDir.toSet
       .flatMap((d: String) => Option(new java.io.File(new java.net.URI(d)).list()).toSeq.flatten)
     EdgeGraph.ensureCheckpointDir(spark, "GraphSpec")
     val before = ckptRdds()
-    val cc = Superstep.connectedComponents(spark, chain, blocks = 4).collect()
+    val cc = try Superstep.connectedComponents(spark, chain, blocks = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
+    finally spark.conf.set(key, saved)
     assert(cc.size === 40)
     assert(cc.values.toSet === Set(0L))
     val written = ckptRdds() -- before

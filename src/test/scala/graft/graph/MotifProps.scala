@@ -20,11 +20,7 @@ object MotifProps extends Properties("graft.motif") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.SparkSuite.spark
 
   // query motifs over variables a/b/c(/d): path, fan-out, fan-in,
   // diamond, triangle, triangle+tail — cyclic shapes exercise the

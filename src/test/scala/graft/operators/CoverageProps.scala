@@ -33,11 +33,7 @@ object CoverageProps extends Properties("graft.coverage") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.SparkSuite.spark
 
   private val rowsGen: Gen[List[(String, String, Long, Long)]] = for {
     n <- Gen.choose(1, 40)

@@ -19,11 +19,7 @@ object IntervalJoinProps extends Properties("graft.intervaljoin") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.SparkSuite.spark
 
   private case class Ival(k: String, s: Long, e: Long)
 

@@ -20,11 +20,7 @@ object SaltProps extends Properties("graft.salt") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.SparkSuite.spark
 
   // rows as (key, id, cents) tuples — a nested case class would trip
   // the encoder's codegen (inner-class constructor). Keys drawn from

@@ -32,11 +32,7 @@ object SessionizeProps extends Properties("graft.sessionize") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.SparkSuite.spark
 
   private case class Row2(k: String, s: Long, e: Long, ds: Long, de: Long)
 

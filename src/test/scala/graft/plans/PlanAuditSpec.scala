@@ -58,7 +58,8 @@ class PlanAuditSpec extends SparkSuite {
     // (c6_window_dedup retired r14: its in-place position-mask lambda
     // became the native JoinExceptPositions merge-walk kernel —
     // isolated mask stage 0.21 → 0.12 s/pass at sf0.1, ~1.8× on the
-    // steady-state min of 6 interleaved reps, scratch/MaskAB.scala;
+    // steady-state min of 6 interleaved reps, scratch/MaskAB.scala as
+    // of commit 8bd5a55;
     // whole-pipeline cost unchanged because the mask is ~4% of c6)
     "d2b_minhash_md5" ->
       ("the DECLARATIVE md5-minhash parity twin: exists precisely to " +

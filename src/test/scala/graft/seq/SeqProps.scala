@@ -18,11 +18,7 @@ object SeqProps extends Properties("graft.seq") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.SparkSuite.spark
 
   private val recordGen: Gen[(String, String, String, Int, Boolean)] = for {
     idLen <- Gen.choose(1, 12)

@@ -20,11 +20,7 @@ object SourcesProps extends Properties("graft.sources") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.SparkSuite.spark
 
   // a gapped alignment as column segments: M = letters both sides,
   // GA = gap in a (ref), GB = gap in b (other), GG = gap in both (a

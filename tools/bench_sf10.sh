@@ -13,7 +13,9 @@
 #   out      artifact path (default BENCH_sf10_<queries>.json)
 #   reps     SPARK_GRAFT_REPEAT (default 2; min-task-CPU pass kept)
 # Env overrides pass through (SPARK_GRAFT_SF_DIR to change fixture,
-# SPARK_GRAFT_WARM_QUERIES to change the warm list).
+# SPARK_GRAFT_WARM_QUERIES to change the warm list, SPARK_GRAFT_JAVA_OPTS
+# for session settings: its default sizes shuffle partitions to the
+# data, -Dspark.sql.shuffle.partitions=320).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -29,7 +31,7 @@ SPARK_GRAFT_QUERIES="$QUERIES" \
 SPARK_GRAFT_WARM_QUERIES="$WARM" \
 SPARK_GRAFT_REPEAT="$REPS" \
 SPARK_GRAFT_MATERIALIZE=0 \
-SPARK_GRAFT_SHUFFLE_PARTITIONS="${SPARK_GRAFT_SHUFFLE_PARTITIONS:-320}" \
+SPARK_GRAFT_JAVA_OPTS="${SPARK_GRAFT_JAVA_OPTS:--Dspark.sql.shuffle.partitions=320}" \
 SPARK_GRAFT_BENCH_OUT="$OUT" \
 SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}" \
   sbt -batch 'runMain graft.Bench' 2>&1 | grep -F '"metric"'

@@ -10,7 +10,10 @@
 # Usage: tools/round_close.sh [SF_DIR] [OUT_A] [OUT_B]
 #   SF_DIR  fixture dir (default /root/testdata/sf0.1)
 #   OUT_A/B artifact paths (default BENCH_close_{a,b}.json)
-# Extra env (SPARK_GRAFT_*) passes straight through to Bench.
+# Extra env passes straight through: Bench's SPARK_GRAFT_* run
+# controls (SPARK_GRAFT_CPUS, _QUERIES, _REPEAT, ...), and session
+# settings as -Dspark.* in SPARK_GRAFT_JAVA_OPTS, which override
+# Graft.session's defaults.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
