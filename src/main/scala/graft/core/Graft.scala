@@ -32,8 +32,8 @@ object Graft {
   /** Shuffle/spill on tmpfs when available (static conf — builder
     * only): the whole suite writes ~180 MB of shuffle at sf0.1, and
     * disk-contended shuffle-file fsyncs were a prime suspect in the
-    * r7 driver-run regressions. Created once per JVM (Scratch guards
-    * free space and removes it at exit), and only when neither the
+    * r7 full-suite bench regressions. Created once per JVM (Scratch
+    * guards free space and removes it at exit), and only when neither the
     * `spark.local.dir` property nor SPARK_LOCAL_DIRS (which Spark
     * prefers over the conf) already places it. */
   private lazy val tmpfsLocalDir: Option[String] =
@@ -77,9 +77,9 @@ object Graft {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Row count of the same table, summed from its parquet footers on
-    * the driver — no Spark job, so a query may size itself by it while
-    * it is being built. */
+  /** Row count of the same table, summed from its parquet footers in
+    * the calling JVM — no Spark job, so a query may size itself by it
+    * while it is being built. */
   def rowCount(spark: SparkSession, dir: String, name: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(s"$dir/$name.parquet")
