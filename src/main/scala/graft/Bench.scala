@@ -5,7 +5,7 @@ import graft.tools.{HostStats, TaskMetricsListener}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.core.Graft.envCpus
     // the stdout sidecar (written at the end) is deleted up front, so
     // a run that dies or fails to write it leaves no earlier run's line
     // behind to be read as this run's

@@ -11,7 +11,7 @@ object Verify {
       case Array(s, o, f) => (s, o, f.split(",").toSeq)
     }
     def wanted(name: String) = only.isEmpty || only.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = graft.core.Graft.envCpus
     // the bench's own session definition, so the oracle checks the
     // code paths and configuration that Bench times
     val spark = graft.core.Graft.session(cores = cpus)

@@ -40,6 +40,11 @@ object Graft {
     if (sys.props.contains("spark.local.dir") || sys.env.contains("SPARK_LOCAL_DIRS")) None
     else Scratch.tmpfsDir("graft_local_")
 
+  /** The local core count of the entry points (Bench, Verify, the
+    * probes): `SPARK_GRAFT_CPUS`, default 32, the bench's width, so
+    * the oracle plans every query at the width the bench times. */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(32)
+
   def session(appName: String = "graft", cores: Int = 0): SparkSession = {
     val local = if (sys.props.contains("spark.master")) Nil else {
       val n = if (cores > 0) cores else Runtime.getRuntime.availableProcessors()

@@ -71,12 +71,11 @@ object MinHashLSH {
                  k: Int = 8, shingleN: Int = 2): DataFrame = {
     val sh = docs.select(col(idCol),
       explode(TextFunctions.shingles(col(toksCol), shingleN)).as("sh"))
-    // k min-aggregates over one shingle pass: the k seed hashes are
+    // one native aggregate over one shingle pass: the k seed hashes are
     // computed map-side and partially min-combined before the single
     // shuffle on the doc id (no seed-explode row multiplication)
-    val aggs = (0 until k).map(i =>
-      min(md5(concat(lit(s"$i:"), col("sh")))).as(s"sig$i"))
-    sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+    sh.groupBy(col(idCol)).agg(graft.functions.MinHashMd5(col("sh"), k).as("__md5"))
+      .select(col(idCol) +: (0 until k).map(i => col("__md5").getItem(i).as(s"sig$i")): _*)
   }
 
   /** Production-hash variant of `signatures`: xxhash64 (codegen'd

@@ -255,10 +255,11 @@ object MotifQuery {
       .select(col(s).as("__src"), col(d).cast("string").as("sh"))
       .where(col("sh").isNotNull)
       .distinct()
-    val sigAggs = (0 until k).map { i =>
-      if (hasher == "xx") min(xxhash64(lit(i), col("sh"))).as(s"sig$i")
-      else min(md5(concat(lit(s"$i:"), col("sh")))).as(s"sig$i")
-    } :+ count(lit(1)).cast("long").as("__sz")
+    // the md5 minima come from one native aggregate (hashes the row k
+    // times, compares raw digests, hex-encodes only the k winners)
+    val sigAggs =
+      if (hasher == "xx") (0 until k).map(i => min(xxhash64(lit(i), col("sh"))).as(s"sig$i"))
+      else Seq(graft.functions.MinHashMd5(col("sh"), k).as("__md5"))
     // sigs stays as LINEAGE (r19 null result, four configs measured
     // solo cold-JVM at sf0.1 — task-CPU, the stable currency across
     // these draws: un-pinned 12.0 s; localCheckpoint pin 13.1;
@@ -270,7 +271,11 @@ object MotifQuery {
     // once-wide-interpreted in the cold-JVM single-pass methodology,
     // and at cluster scale both sides shuffle and ReuseExchange
     // covers the double evaluation anyway.)
-    val sigs = sh.groupBy("__src").agg(sigAggs.head, sigAggs.tail: _*)
+    val sigAgg = sh.groupBy("__src").agg(count(lit(1)).cast("long").as("__sz"), sigAggs: _*)
+    val sigs =
+      if (hasher == "xx") sigAgg
+      else sigAgg.select(col("__src") +: col("__sz") +:
+        (0 until k).map(i => col("__md5").getItem(i).as(s"sig$i")): _*)
     // bucket expressions bit-identical to MinHashLSH.bandBuckets{,Xx}
     // (the DuckDB oracle reproduces the md5 form's buckets)
     val r = k / bands

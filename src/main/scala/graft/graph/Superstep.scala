@@ -1,6 +1,7 @@
 package graft.graph
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
@@ -25,22 +26,29 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * synchronous round does, and its local ones as of the current
   * superstep, so a phase never takes more supersteps than a
   * synchronous loop takes rounds; how many fewer depends on how the
-  * blocks cut the graph. On a graph that fits one block (fewer than
-  * 65 536 edges) no message is ever sent: CC, BFS and k-core finish in
-  * one superstep, SCC in three per colouring iteration plus a last
-  * trim.
+  * blocks cut the graph.
   *
   * The block count is `EdgeGraph.sizedPartitions` of the edge count.
-  * Every `spark.graphx.pregel.checkpointInterval` (session conf)
-  * supersteps the loop state is reliably checkpointed (into `EdgeGraph.ensureCheckpointDir`)
-  * so lineage stays bounded; the result is a reliable checkpoint and
-  * every loop cache is released before returning.
+  * An edge set that fits one block (fewer than 65 536 edge rows) runs
+  * in the driver: one Spark job takes the rows, the same `advance`
+  * loop runs the program on the one `Topology`, where no message is
+  * ever sent (CC, BFS and k-core finish in one superstep, SCC in three
+  * per colouring iteration plus a last trim), and the result is a
+  * local relation. So is a `shortestPaths` call whose result bound
+  * (vertices × landmarks) fits two blocks' rows; a larger one, and
+  * every call at an explicit block count, takes the distributed loop.
+  * There, every `spark.graphx.pregel.checkpointInterval` (session
+  * conf) supersteps the loop state is reliably checkpointed (into
+  * `EdgeGraph.ensureCheckpointDir`) so lineage stays bounded; only
+  * this multi-block result is a reliable checkpoint. Either way every
+  * loop cache is released before returning.
   *
   * Edges arrive as a two-column (src, dst) DataFrame of longs; each
   * program decides which directions it follows. Duplicate edges are
   * collapsed; a self-loop makes a vertex its own neighbour.
   */
 private[graph] object Superstep {
+  import EdgeGraph.BlockRows
 
   def connectedComponents(spark: SparkSession, edges: DataFrame,
                           maxIterations: Int = Int.MaxValue, blocks: Int = 0): DataFrame = {
@@ -169,6 +177,9 @@ private[graph] object Superstep {
 
     def columns: Seq[String]
 
+    /** An upper bound on the result rows of `vertices` vertices. */
+    def resultRows(vertices: Int): Long = vertices
+
     /** Result rows of a block: (id, value) of each local vertex. */
     def rows(t: Topology, vals: Array[V]): Iterator[Row] =
       Iterator.range(0, t.nLocal).map(v => Row(t.ids(v), vals(v)))
@@ -198,9 +209,79 @@ private[graph] object Superstep {
 
   private def run[V](spark: SparkSession, edges: DataFrame, program: Program[V],
                      who: String, blocks: Int): DataFrame = {
-    EdgeGraph.ensureCheckpointDir(spark, who)
     val pairs = edges.rdd.map(r => (r.getLong(0), r.getLong(1))).persist()
-    val nb = if (blocks > 0) blocks else EdgeGraph.sizedPartitions(spark, pairs.count())
+    try {
+      if (blocks > 0) distributed(spark, pairs, program, who, blocks)
+      else edgeRows(pairs) match {
+        case Left(rows) => distributed(spark, pairs, program, who, EdgeGraph.sizedPartitions(spark, rows))
+        case Right(es) =>
+          val t = Topology(0, 1, es)
+          // the driver holds at most one block's state and result rows
+          if (program.resultRows(t.size) <= 2L * BlockRows) inDriver(spark, program, t)
+          else distributed(spark, pairs, program, who, 1)
+      }
+    } finally pairs.unpersist()
+  }
+
+  /** The edge rows of `pairs` when there are fewer than `BlockRows`
+    * (Right), else their count (Left), from one Spark job that reads
+    * every partition through, so the loop finds `pairs` cached. A
+    * partition ships its rows only below its share of the bound (at
+    * least 4096), which bounds what a large graph sends the driver;
+    * a small edge set spread unevenly past the shares is collected by
+    * a second job over the cached rows. */
+  private def edgeRows(pairs: RDD[(Long, Long)]): Either[Long, Iterator[(Long, Long)]] = {
+    val share = math.max(BlockRows / math.max(pairs.getNumPartitions, 1), 4096)
+    val parts = pairs.sparkContext.runJob(pairs, (it: Iterator[(Long, Long)]) => {
+      val flat = Array.newBuilder[Long]
+      var n = 0L
+      it.foreach { case (s, d) =>
+        if (n < share) { flat += s; flat += d }
+        n += 1
+      }
+      (n, if (n < share) flat.result() else null)
+    })
+    val rows = parts.map(_._1).sum
+    if (rows >= BlockRows) Left(rows)
+    else if (parts.exists(_._2 == null)) Right(pairs.collect().iterator)
+    else Right(parts.iterator.flatMap(p => Iterator.range(0, p._2.length, 2).map(i => (p._2(i), p._2(i + 1)))))
+  }
+
+  /** Supersteps until the program stops: `step(superstep, phase, fresh)`
+    * runs one and returns its totals. */
+  private def loop(program: Program[_])(step: (Int, Int, Boolean) => Stats): Unit = {
+    var superstep = 0
+    var phase = 0
+    var fresh = true
+    while (phase >= 0) {
+      superstep += 1
+      val p = phase
+      phase = program.next(superstep, p, step(superstep, p, fresh))
+      fresh = phase != p
+    }
+  }
+
+  private def schema(program: Program[_]): StructType =
+    StructType(program.columns.map(StructField(_, LongType, nullable = false)))
+
+  /** The loop over one block, in the driver: the block has no ghosts,
+    * so it gets no inbox and sends no message, and the result is a
+    * local relation (no Spark job, no checkpoint). */
+  private def inDriver[V](spark: SparkSession, program: Program[V], t: Topology): DataFrame = {
+    implicit val tag: ClassTag[V] = program.tag
+    var cur = Step[V](Array.tabulate(t.size)(x => program.init(t.ids(x))), Array.empty, Stats(0, 0, 0))
+    loop(program) { (_, phase, fresh) =>
+      cur = advance(program, t, cur, Iterator.empty, phase, fresh)
+      cur.stats
+    }
+    spark.createDataFrame(program.rows(t, cur.vals).toList.asJava, schema(program))
+  }
+
+  /** The loop over `nb` blocks, one Spark job per superstep; the
+    * result is a reliable checkpoint. */
+  private def distributed[V](spark: SparkSession, pairs: RDD[(Long, Long)], program: Program[V],
+                             who: String, nb: Int): DataFrame = {
+    EdgeGraph.ensureCheckpointDir(spark, who)
     val part = new HashPartitioner(nb)
     val topo = pairs
       .flatMap { case e @ (s, d) =>
@@ -217,30 +298,23 @@ private[graph] object Superstep {
       Step(Array.tabulate(t.size)(x => program.init(t.ids(x))), Array.empty, Stats(0, 0, 0))
     }, preservesPartitioning = true)
     try {
-      var superstep = 0
-      var phase = 0
-      var fresh = true
-      while (phase >= 0) {
-        superstep += 1
-        val (p, f, prev) = (phase, fresh, cur)
+      loop(program) { (superstep, phase, fresh) =>
+        val prev = cur
         val inbox = prev.flatMap(_.out).partitionBy(part)
         cur = topo.zipPartitions(prev, inbox, preservesPartitioning = true) {
-          (ts, ss, msgs) => Iterator(advance(program, ts.next(), ss.next(), msgs.map(_._2), p, f))
+          (ts, ss, msgs) => Iterator(advance(program, ts.next(), ss.next(), msgs.map(_._2), phase, fresh))
         }.persist()
         if (interval > 0 && superstep % interval == 0) cur.checkpoint()
         // prev is released whether or not the job succeeds; cur by the finally below
         val stats = try cur.map(_.stats).reduce(_ + _) finally prev.unpersist()
         if (superstep == 1) pairs.unpersist()
-        phase = program.next(superstep, p, stats)
-        fresh = phase != p
+        stats
       }
       val rows = topo.zipPartitions(cur, preservesPartitioning = true) {
         (ts, ss) => program.rows(ts.next(), ss.next().vals)
       }
-      val schema = StructType(program.columns.map(StructField(_, LongType, nullable = false)))
-      spark.createDataFrame(rows, schema).checkpoint()
+      spark.createDataFrame(rows, schema(program)).checkpoint()
     } finally {
-      pairs.unpersist()
       topo.unpersist()
       cur.unpersist()
     }
@@ -334,6 +408,8 @@ private[graph] object Superstep {
     def next(superstep: Int, phase: Int, s: Stats): Int = if (s.messages == 0) -1 else 0
 
     def columns: Seq[String] = Seq("node", "landmark", "dist")
+
+    override def resultRows(vertices: Int): Long = vertices.toLong * landmarks.length
 
     override def rows(t: Topology, vals: Array[Array[Int]]): Iterator[Row] =
       for {

@@ -27,6 +27,16 @@ object Scratch {
     }))
   }
 
+  /** Removes `dir` recursively at JVM exit (if it exists by then). */
+  def removeAtExit(dir: String): Unit = {
+    hook
+    dirs.add(java.nio.file.Paths.get(dir))
+  }
+
+  /** Whether `removeAtExit` registered `dir`. */
+  private[graft] def removedAtExit(dir: String): Boolean =
+    dirs.contains(java.nio.file.Paths.get(dir))
+
   /** /dev/shm when present and writable, else the JVM temp dir. */
   def fastLocalBase: String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
@@ -48,9 +58,8 @@ object Scratch {
       if (java.nio.file.Files.isDirectory(shm) &&
           java.nio.file.Files.isWritable(shm) &&
           java.nio.file.Files.getFileStore(shm).getUsableSpace > minFreeBytes) {
-        hook
         val d = java.nio.file.Files.createTempDirectory(shm, prefix)
-        dirs.add(d)
+        removeAtExit(d.toString)
         Some(d.toString)
       } else None
     } catch { case _: Throwable => None }

@@ -52,7 +52,7 @@ object SkewProbe {
     val sfDir = args.headOption.getOrElse("/root/repo/localdata/v2sf1")
     val nKeys = args.lift(1).map(_.toLong).getOrElse(1024L)
     val buckets = args.lift(2).map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.core.Graft.envCpus
     val spark = graft.core.Graft.session("skew-probe", cores = cpus)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val parts = spark.conf.get("spark.sql.shuffle.partitions")

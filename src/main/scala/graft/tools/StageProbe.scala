@@ -18,7 +18,7 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("d14_lsh_recall")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.core.Graft.envCpus
     val spark = graft.core.Graft.session("stage-probe", cores = cpus)
     case class St(var n: Int = 0, var run: Long = 0L, var cpu: Long = 0L,
                   var maxRun: Long = 0L, var rows: Long = 0L,

@@ -30,6 +30,14 @@ class SessionSpec extends SparkSuite {
     assert(args("Verify") === args("Bench"))
   }
 
+  test("Bench and Verify take their core count from Graft.envCpus") {
+    for (main <- Seq("Bench", "Verify")) {
+      val src = Files.readString(Paths.get(s"src/main/scala/graft/$main.scala"))
+      assert(src.contains("val cpus = graft.core.Graft.envCpus"), main)
+      assert(!src.contains("SPARK_GRAFT_CPUS"), s"$main parses SPARK_GRAFT_CPUS itself")
+    }
+  }
+
   test("the shared test session carries Graft.session's defaults") {
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")

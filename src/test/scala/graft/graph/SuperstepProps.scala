@@ -6,15 +6,20 @@ import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Property check for the block-local superstep driver (`Superstep`):
-  * every iterative `EdgeGraph` algorithm, run at block counts 1, 2, 3
-  * and 8, against a scalar in-memory oracle. The random directed
-  * graphs mix self-loops, duplicate and reciprocal edges, a chain
-  * longer than the largest block count (so a value crosses many
-  * blocks), a cycle, and an isolated pair; ids spread over small and
-  * above-32-bit values so the block hash splits neighbours apart.
+  * every iterative `EdgeGraph` algorithm, run in the driver (block
+  * count 0, auto: these graphs fit one block) and by the distributed
+  * loop at block counts 1, 2, 3 and 8, against a scalar in-memory
+  * oracle. The random directed graphs mix self-loops, duplicate and
+  * reciprocal edges, a chain longer than the largest block count (so a
+  * value crosses many blocks), a cycle, and an isolated pair; ids
+  * spread over small and above-32-bit values so the block hash splits
+  * neighbours apart.
   * Every result must equal the oracle, hence be the same at every
   * block count. SCC at a tight `numIter` is checked against GraphX
-  * itself, whose iteration semantics it keeps.
+  * itself, whose iteration semantics it keeps. Truncated runs: CC at a
+  * small `maxIterations` must equal the one-block loop in the driver
+  * and stay between the full labels and the vertex ids elsewhere, and
+  * k-core at `maxRounds = 1` must throw or return the full core.
   */
 object SuperstepProps extends Properties("graft.superstep") {
 
@@ -23,7 +28,8 @@ object SuperstepProps extends Properties("graft.superstep") {
 
   private lazy val spark: SparkSession = graft.SparkSuite.spark
 
-  private val blockCounts = Seq(1, 2, 3, 8)
+  /** 0 is the automatic block count, which runs these graphs in the driver. */
+  private val blockCounts = Seq(0, 1, 2, 3, 8)
 
   private type Edges = List[(Long, Long)]
 
@@ -128,6 +134,20 @@ object SuperstepProps extends Properties("graft.superstep") {
       }
     }
 
+  property("connectedComponents truncated at maxIterations: driver == one block, else coarser") =
+    forAll(graphGen, Gen.choose(1, 3)) { (es, maxIterations) =>
+      val full = bruteComponents(es)
+      def run(b: Int) = pairs(Superstep.connectedComponents(spark, frame(es), maxIterations, blocks = b))
+      // one block converges in its first superstep; more blocks may stop
+      // early with a label of the same component between the full one and the id
+      run(0) == full && run(1) == full && Seq(2, 3, 8).forall { b =>
+        val got = run(b)
+        got.keySet == full.keySet && got.forall { case (n, l) =>
+          full(n) <= l && l <= n && full.get(l).contains(full(n))
+        }
+      }
+    }
+
   property("shortestPaths == BFS oracle, with and without maxDist") =
     forAll(graphGen, Gen.choose(1, 4)) { (es, maxDist) =>
       val landmarks = Seq(nodes(es).min, 200L, 999L) // 999 is not a vertex
@@ -160,6 +180,16 @@ object SuperstepProps extends Properties("graft.superstep") {
       atEveryBlockCount(bruteCore(es, k)) { b =>
         pairs(Superstep.kCore(spark, frame(es), k, blocks = b))
       }
+    }
+
+  property("kCore at maxRounds = 1: the full core, or a throw, never a truncated peel") =
+    forAll(graphGen, Gen.choose(1, 3)) { (es, k) =>
+      val core = bruteCore(es, k)
+      def run(b: Int) =
+        try Right(pairs(Superstep.kCore(spark, frame(es), k, maxRounds = 1, blocks = b)))
+        catch { case e: IllegalStateException if e.getMessage.contains("raise maxRounds") => Left(e) }
+      run(0) == Right(core) && run(1) == Right(core) &&
+        Seq(2, 3, 8).forall(b => run(b).forall(_ == core))
     }
 
   property("labelPropagation == synchronous scalar rounds at every block count") =

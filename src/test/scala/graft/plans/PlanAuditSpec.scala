@@ -62,9 +62,11 @@ class PlanAuditSpec extends SparkSuite {
     // of commit 8bd5a55;
     // whole-pipeline cost unchanged because the mask is ~4% of c6)
     "d2b_minhash_md5" ->
-      ("the DECLARATIVE md5-minhash parity twin: exists precisely to " +
-       "cross-check the native U-family kernels against the r1-r7 baseline " +
-       "arithmetic; making it native would erase the thing it tests"),
+      ("the DECLARATIVE md5-minhash parity twin: its ngram shingles exist " +
+       "precisely to cross-check the native U-family kernels against the r1-r7 " +
+       "baseline arithmetic; making them native would erase the thing it tests " +
+       "(its md5 minima are the native MinHashMd5 aggregate, byte-identical to " +
+       "the declarative min(md5(concat)) per MinHashMd5Spec)"),
     "n10_mmr_rerank" ->
       ("the bounded MMR greedy recursion evaluated as ONE HOF projection " +
        "over k≤25-element broadcast-sized arrays; the unrolled join+window " +
