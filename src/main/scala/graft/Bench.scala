@@ -1,8 +1,20 @@
 package graft
 
-import graft.tools.{HostStats, TaskMetricsListener}
+import graft.tools.{HostStats, QueryTrace, TraceWindow}
 
 object Bench {
+
+  /** The nine per-query task keys of the metrics block, from a trace
+    * window's totals (`task_cpu_ms` is whole milliseconds). */
+  private[graft] def taskKeys(w: TraceWindow): Seq[(String, Long)] = {
+    val t = w.totals
+    Seq("task_run_ms" -> t("run_ms"), "task_cpu_ms" -> t("cpu_ns") / 1000000L,
+      "gc_ms" -> t("gc_ms"), "shuf_read_b" -> t("shuffle_read_b"),
+      "shuf_write_b" -> t("shuffle_write_b"), "spill_mem_b" -> t("spill_mem_b"),
+      "spill_disk_b" -> t("spill_disk_b"), "result_ser_ms" -> t("result_ser_ms"),
+      "tasks" -> t("tasks"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.core.Graft.envCpus
@@ -41,11 +53,7 @@ object Bench {
     // a bare wall-clock number cannot be adjudicated when two runs of
     // identical code disagree 2.7×; these counters plus the host
     // samples below make every number carry its own evidence.
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    def drain(): Unit =
-      try org.apache.spark.graft.GraftSparkHooks.drainListenerBus(spark.sparkContext)
-      catch { case _: Throwable => () }
+    val trace = QueryTrace.of(spark.sparkContext)
     // warm up the JVM/codegen/file-index paths so the first timed query
     // isn't charged for session start
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -54,6 +62,9 @@ object Bench {
     // comma decimals (1,234) on e.g. de_DE hosts — invalid JSON
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    // a JSON string (escaped: a quote or backslash in the value must
+    // not corrupt the one-line JSON contract)
+    def str(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     // Environment snapshot BEFORE any timed query: host load, free
     // memory, and measured sequential-write throughput of the two
     // disks this process depends on (cwd = bench output, tmpdir =
@@ -66,11 +77,8 @@ object Bench {
       "cwd_write_mbs" -> fmt(HostStats.writeMbs(".")),
       "tmp_write_mbs" -> fmt(HostStats.writeMbs(tmpDir))) ++
       // warm order is part of a run's comparability fingerprint
-      // (escaped: a quote/backslash in the env value must not corrupt
-      // the one-line JSON contract)
       sys.env.get("SPARK_GRAFT_WARM_QUERIES").filter(_.nonEmpty)
-        .map(w => "warm_queries" ->
-          ("\"" + w.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")).toSeq
+        .map(w => "warm_queries" -> str(w)).toSeq
     def objJson(kvs: Seq[(String, String)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val envJson = objJson(envBlock)
@@ -88,8 +96,7 @@ object Bench {
     // (GraphX, which triangleCounts uses, caches vertex/edge RDDs it
     // never releases) so each timing measures the query, not its
     // neighbor's leftover memory pressure.
-    val doScrub = sys.env.getOrElse("SPARK_GRAFT_SCRUB", "1") != "0"
-    def scrub(): Unit = if (doScrub) {
+    def scrub(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       spark.catalog.clearCache()
       // settle the JVM between queries: a full GC + a beat for async
@@ -168,9 +175,6 @@ object Bench {
         .agg(expr("bit_xor(__h)").as("h"), expr("count(1)").as("n")).collect()(0)
       ((if (row.isNullAt(0)) 0L else row.getLong(0)), row.getLong(1))
     }
-    // (wall seconds, streaming-engine seconds if the query ran a
-    // streaming replay — wall − engine is MemoryStream harness time,
-    // and the per-query metrics block)
     // each matching query warms ONCE even when warm entries overlap
     // ("j2,j2d" must not re-pay a multi-minute sf10 pass per entry)
     val warmNames = SparkEntry.queries.keys.toSeq.sorted
@@ -189,7 +193,11 @@ object Bench {
         scrub()
       }
     }
-    val results: Seq[(String, (Double, Option[Double], Seq[(String, String)], Boolean))] =
+    // per query: (wall seconds, streaming-engine seconds if the query
+    // ran a streaming replay — wall − engine is MemoryStream harness
+    // time, the metrics block, erred, and the trace line: the kept
+    // pass's stage rows and build-time jobs)
+    val results: Seq[(String, (Double, Option[Double], Seq[(String, String)], Boolean, String))] =
       selected.map { case (name, fn) =>
         // stderr progress marker so a crashed run (OOM, kill) names
         // the query it died in — the artifact only writes at the end
@@ -198,6 +206,7 @@ object Bench {
         var kept = 0.0
         var engine = Option.empty[Double]
         var metr: Seq[(String, String)] = Nil
+        var traceLine = ""
         // a query that THROWS at bench time must not book its ~0 s
         // wall as a speedup in the comparable series (the old silent
         // catch did exactly that — VERDICT r14): record the exception
@@ -207,23 +216,25 @@ object Bench {
         var succeeded = false
         for (_ <- 1 to repeat) {
           graft.streaming.StreamMeter.reset()
-          drain(); listener.snapshotAndReset() // zero the counters
+          trace.snapshotAndReset() // zero the window
           val j0 = HostStats.cpuJiffies()
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count(); succeeded = true } catch {
+          // built under job group <name>, so the trace counts the jobs
+          // that building it runs (eager pins) apart from its action's
+          spark.sparkContext.setJobGroup(name, s"build $name")
+          try { (try fn(spark, sfDir) finally spark.sparkContext.clearJobGroup()).count(); succeeded = true } catch {
             case e: Throwable =>
               lastErr = Some(e.getClass.getSimpleName)
               System.err.println(s"[bench] $name FAILED: $e")
           }
           val wall = (System.nanoTime() - t0) / 1e9
-          drain()
-          val snap = listener.snapshotAndReset()
+          val window = trace.snapshotAndReset()
           val j1 = HostStats.cpuJiffies()
           val iow = if (j1._2 > j0._2)
             100.0 * (j1._1 - j0._1) / (j1._2 - j0._2) else -1.0
           val e = graft.streaming.StreamMeter.engineSeconds
-          val cpuMs = snap.collectFirst { case ("task_cpu_ms", v) => v.toDouble }
-            .getOrElse(wall * 1000.0)
+          val keys = taskKeys(window)
+          val cpuMs = keys.toMap.apply("task_cpu_ms").toDouble
           // per-pass CPU on stderr: the DRIFT stability evidence (reps
           // within ~5% ⇒ the stage is compiled and steady; a 2-3×
           // outlier pass = the interpreted/JIT lottery of DRIFT_r12 §8)
@@ -233,7 +244,7 @@ object Bench {
             best = cpuMs
             kept = wall
             engine = if (e > 0.0) Some(e) else None
-            metr = snap.map { case (k, v) => k -> v.toString } ++ Seq(
+            metr = keys.map { case (k, v) => k -> v.toString } ++ Seq(
               "iowait_pct" -> fmt(iow),
               "load1" -> fmt(HostStats.load1()),
               "mem_avail_mb" -> HostStats.memAvailMb().toString) ++
@@ -241,13 +252,19 @@ object Bench {
                 "state_rows" -> graft.streaming.StreamMeter.stateRowsTotal.toString,
                 "state_bytes" -> graft.streaming.StreamMeter.stateBytesTotal.toString)
                else Nil)
+            traceLine = objJson(Seq("query" -> str(name),
+              "build_jobs" -> window.jobs.getOrElse(name, 0).toString,
+              "drained" -> window.drained.toString,
+              "stages" -> window.stages.map(r => objJson(Seq("stage" -> r.stage.toString,
+                "name" -> str(r.name), "group" -> str(r.group)) ++
+                QueryTrace.Metrics.zip(r.values.map(_.toString)))).mkString("[", ",", "]")))
           }
           scrub()
         }
         val err = if (succeeded) None else lastErr
-        err.foreach { cls => metr = metr :+ ("err" -> ("\"" + cls + "\"")) }
+        err.foreach { cls => metr = metr :+ ("err" -> str(cls)) }
         if (doMat) {
-          drain(); listener.snapshotAndReset()
+          trace.snapshotAndReset()
           val t0 = System.nanoTime()
           val hash =
             try Some(matRow(fn(spark, sfDir)))
@@ -258,11 +275,8 @@ object Bench {
               None
             }
           val matWall = (System.nanoTime() - t0) / 1e9
-          drain()
-          val matSnap = listener.snapshotAndReset()
+          val matCpu = taskKeys(trace.snapshotAndReset()).toMap.apply("task_cpu_ms").toDouble
           hash.foreach { case (h, n) =>
-            val matCpu = matSnap.collectFirst { case ("task_cpu_ms", v) => v.toDouble }
-              .getOrElse(0.0)
             metr = metr ++ Seq(
               "mat_wall_s" -> fmt(matWall),
               "mat_cpu_ms" -> fmt(matCpu),
@@ -271,7 +285,7 @@ object Bench {
           }
           scrub()
         }
-        name -> ((kept, engine, metr, err.isDefined))
+        name -> ((kept, engine, metr, err.isDefined, traceLine))
       }
     def toJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
@@ -282,8 +296,8 @@ object Bench {
     val flat: Seq[(String, Double)] = results.flatMap {
       // erred queries contribute NO wall row — their near-zero wall
       // would read as a speedup; the err marker lives in the metrics
-      case (_, (_, _, _, true)) => Nil
-      case (k, (wall, eOpt, m, _)) =>
+      case (_, (_, _, _, true, _)) => Nil
+      case (k, (wall, eOpt, m, _, _)) =>
         val base = eOpt match {
           case Some(e) => Seq(k -> wall, s"${k}__engine_s" -> e,
             s"${k}__harness_s" -> math.max(0.0, wall - e))
@@ -296,7 +310,7 @@ object Bench {
           s"${k}__mat_s" -> v.toDouble }
     }
     val metricsJson = results
-      .map { case (k, (_, _, m, _)) => "\"" + k + "\":" + objJson(m) }
+      .map { case (k, (_, _, m, _, _)) => "\"" + k + "\":" + objJson(m) }
       .mkString("{", ",", "}")
     val ok = results.filterNot(_._2._4)
     val total = if (ok.nonEmpty) ok.map(_._2._1).sum else 0.0
@@ -304,7 +318,7 @@ object Bench {
     // Wall time on a contended host inflates uniformly (r7/r8 lesson);
     // executor CPU seconds barely move, so driver-vs-quiet comparisons
     // can adjudicate contention from the artifact alone.
-    val cpuTotalS = ok.flatMap { case (_, (_, _, m, _)) =>
+    val cpuTotalS = ok.flatMap { case (_, (_, _, m, _, _)) =>
       m.collectFirst { case ("task_cpu_ms", v) => v.toDouble / 1000.0 }
     }.sum
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
@@ -346,24 +360,27 @@ object Bench {
     // stale file from an earlier run advertised as this run's output —
     // delete first, and advertise null on failure so the condition is
     // detectable downstream
-    val wrote =
+    def write(path: String, lines: Seq[String]): Boolean =
       try {
-        val p = java.nio.file.Paths.get(outPath)
+        val p = java.nio.file.Paths.get(path)
         java.nio.file.Files.deleteIfExists(p)
-        java.nio.file.Files.write(p, (fullJson + "\n").getBytes("UTF-8"))
+        java.nio.file.Files.write(p, lines.map(_ + "\n").mkString.getBytes("UTF-8"))
         true
-      } catch { case _: Throwable => false }
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"WARNING: could not write $path: $e")
+          false
+      }
+    val wrote = write(outPath, Seq(fullJson))
+    // the per-stage breakdown beside the full map, one line per query
+    write(outPath.stripSuffix(".json") + ".trace.jsonl", results.map(_._2._5))
     val fullField = if (wrote) "\"" + outPath + "\"" else "null"
     val line =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpu_total_s":${fmt(cpuTotalS)},"queries":${toJson(lineQs)},"env":$envJson,"sf":$sfNum,"full":$fullField}"""
     // belt-and-braces for the stdout contract: the exact stdout line
     // also lands in a sidecar file, so a truncated/prefixed stdout
     // capture can still be reconciled against a parseable copy
-    try java.nio.file.Files.write(sidecar, (line + "\n").getBytes("UTF-8"))
-    catch {
-      case e: Throwable =>
-        System.err.println(s"WARNING: could not write $sidecar: $e")
-    }
+    write(sidecar.toString, Seq(line))
     // stop BEFORE the final print: shutdown may log to stderr, and
     // with raw (unbuffered, interleaved) forked output those lines
     // could otherwise land between the JSON line and the driver's

@@ -145,7 +145,7 @@ object SetSimJoin {
     // fraction of ALL candidate pairs, and a q-keyed exchange hashes
     // that probe's entire verify work into ONE task (d14 at sf0.1:
     // one 5.6 s task owned the whole stage while 31 cores idled —
-    // StageProbe). The pair key is unique per row, so the exchange
+    // the bench trace's max_run_ms). The pair key is unique per row, so the exchange
     // spreads evenly at every scale; the verify joins don't rely on
     // this partitioning (set side broadcasts here, re-shuffles at
     // scale either way).

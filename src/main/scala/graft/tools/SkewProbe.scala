@@ -1,17 +1,14 @@
 package graft.tools
 
-import scala.collection.concurrent.TrieMap
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Skew-bound measurement for the salted operators (VERDICT r14 #7):
   * derives a deliberately Zipfian join key over the v2 events fixture
   * (rank-frequency ~ 1/k, deterministic in event_id — the ScaleDataV2
   * hot-draw recipe with s=1 over the full key range, no new fixture
-  * dir needed) and records PER-TASK shuffle-read record counts for a
-  * big-big shuffle-hash join, unsalted vs `Salt.saltedJoin`. The claim
+  * dir needed) and reads the reduce stage's largest and mean per-task
+  * shuffle-read rows (`QueryTrace` stage row) for a big-big
+  * shuffle-hash join, unsalted vs `Salt.saltedJoin`. The claim
   * under test: the salt bounds the largest reduce task within ~2× of
   * the mean where the unsalted hot key pins one task at many× mean.
   *
@@ -33,21 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object SkewProbe {
 
-  private final class TaskRows extends SparkListener {
-    val byStage = TrieMap[Int, ArrayBuffer[Long]]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val recs = Option(t.taskMetrics).map(_.shuffleReadMetrics.recordsRead)
-        .getOrElse(0L)
-      byStage.getOrElseUpdate(t.stageId, ArrayBuffer()) += recs
-    }
-    /** the reduce stage = the stage that shuffle-read the most rows */
-    def reduceTasks(): Seq[Long] = {
-      val s = byStage.toSeq.map { case (id, b) => (id, b.toSeq) }
-      if (s.isEmpty) Seq.empty else s.maxBy(_._2.sum)._2
-    }
-    def reset(): Unit = byStage.clear()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/localdata/v2sf1")
     val nKeys = args.lift(1).map(_.toLong).getOrElse(1024L)
@@ -56,8 +38,7 @@ object SkewProbe {
     val spark = graft.core.Graft.session("skew-probe", cores = cpus)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val parts = spark.conf.get("spark.sql.shuffle.partitions")
-    val probe = new TaskRows
-    spark.sparkContext.addSparkListener(probe)
+    val trace = QueryTrace.of(spark.sparkContext)
 
     // Zipf(s=1) rank draw: u log-uniform → floor(K^u) has P(k) ≈ 1/(k·lnK);
     // hottest key share ≈ ln2/lnK (10% at K=1024)
@@ -69,21 +50,16 @@ object SkewProbe {
     val dim = spark.range(0L, nKeys + 1).toDF("zkey")
       .withColumn("attr", pmod(xxhash64(col("zkey"), lit("attr")), lit(97L)))
 
-    def stats(rows: Seq[Long]): (Int, Long, Double, Double) = {
-      val n = rows.size
-      val mx = if (rows.isEmpty) 0L else rows.max
-      val mean = if (rows.isEmpty) 0.0 else rows.sum.toDouble / n
-      (n, mx, mean, if (mean > 0) mx / mean else 0.0)
-    }
     def fmt(d: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(d))
 
     def run(name: String)(f: => Long): String = {
-      probe.reset()
+      trace.snapshotAndReset()
       val out = f
-      try org.apache.spark.graft.GraftSparkHooks.drainListenerBus(spark.sparkContext)
-      catch { case _: Throwable => Thread.sleep(500) }
-      val (n, mx, mean, ratio) = stats(probe.reduceTasks())
-      s""""$name":{"join_rows":$out,"tasks":$n,"rows_max":$mx,"rows_mean":${fmt(mean)},"max_over_mean":${fmt(ratio)}}"""
+      // the reduce stage = the stage that shuffle-read the most rows
+      val r = trace.snapshotAndReset().stages.maxBy(_("shuffle_read_records"))
+      val (n, mx) = (r("tasks"), r("max_shuffle_read_records"))
+      val mean = r("shuffle_read_records").toDouble / n
+      s""""$name":{"join_rows":$out,"tasks":$n,"rows_max":$mx,"rows_mean":${fmt(mean)},"max_over_mean":${fmt(if (mean > 0) mx / mean else 0.0)}}"""
     }
 
     val hotShare = {
@@ -91,7 +67,6 @@ object SkewProbe {
       val hot = fact.where(col("zkey") === 1L).count()
       hot / tot
     }
-    probe.reset()
     val unsalted = run("unsalted") {
       fact.join(dim.hint("shuffle_hash"), Seq("zkey")).count()
     }

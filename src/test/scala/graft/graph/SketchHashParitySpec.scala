@@ -1,5 +1,8 @@
 package graft.graph
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -66,5 +69,53 @@ class SketchHashParitySpec extends SparkSuite {
     assert(xx.isDefined && md.isDefined, s"near pair missed: xx=$xx md5=$md")
     assert(math.abs(xx.get - md.get) <= 2 * 10000 / 16,
       s"families disagree: xx=$xx md5=$md")
+  }
+
+  test("md5 sketch equals a plain-Scala reference row for row") {
+    import spark.implicits._
+    // 12 communities of 8 sources; each source keeps ~85% of its
+    // community's 12 targets plus 0-2 random ones, so same-community
+    // pairs sit near J = 0.7 and many collide in some band; duplicate
+    // and null-target edges exercise the distinct and the null drop
+    val rnd = new scala.util.Random(20261019L)
+    val edges: Seq[(Long, Option[Long])] = for {
+      c <- 0 until 12
+      s <- 0 until 8
+      src = 100L * c + s
+      dst <- (0 until 12).filter(_ => rnd.nextDouble() < 0.85).map(t => Some(10000L + 100L * c + t)) ++
+        Seq.fill(rnd.nextInt(3))(Some(20000L + rnd.nextInt(500))) ++
+        (if (rnd.nextInt(4) == 0) Seq(None, Some(10000L + 100L * c)) else Nil)
+    } yield (src, dst)
+    val k = 16
+    val bands = 4
+
+    def md5Hex(s: String): String =
+      MessageDigest.getInstance("MD5").digest(s.getBytes(UTF_8)).map(b => f"${b & 0xff}%02x").mkString
+    val sets: Map[Long, Set[Long]] = edges.collect { case (s, Some(d)) => (s, d) }
+      .groupBy(_._1).map { case (s, es) => s -> es.map(_._2).toSet }
+    val sigs: Map[Long, IndexedSeq[String]] = sets.map { case (s, ds) =>
+      s -> (0 until k).map(i => ds.map(d => md5Hex(s"$i:$d")).min)
+    }
+    val r = k / bands
+    val buckets: Map[Long, Set[(Int, String)]] = sigs.map { case (s, sig) =>
+      s -> (0 until bands).map(b => b -> md5Hex(sig.slice(b * r, (b + 1) * r).mkString)).toSet
+    }
+    val nodes = sets.keys.toSeq.sorted
+    val expected = (for {
+      i <- nodes
+      j <- nodes if i < j && (buckets(i) & buckets(j)).nonEmpty
+    } yield {
+      val m = (0 until k).count(x => sigs(i)(x) == sigs(j)(x))
+      val est = math.floor(10000.0 * m / k).toLong
+      val shared = math.floor((est * (sets(i).size + sets(j).size)).toDouble / (10000L + est)).toLong
+      (i, j, est, shared)
+    }).toSet
+    assert(expected.size >= 50, s"only ${expected.size} candidate pairs")
+
+    val got = MotifQuery.sharedNeighborsSketch(edges.toDF("src", "dst"), k = k, bands = bands,
+        hasher = "md5")
+      .select("s1", "s2", "est_jac_bp", "n_shared_est").as[(Long, Long, Long, Long)].collect()
+    assert(got.length === got.toSet.size)
+    assert(got.toSet === expected)
   }
 }

@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -20,6 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * small `maxIterations` must equal the one-block loop in the driver
   * and stay between the full labels and the vertex ids elsewhere, and
   * k-core at `maxRounds = 1` must throw or return the full core.
+  * The properties do not shrink: each shrink candidate would rerun the
+  * loop at five block counts, so a falsified property reports its
+  * first counterexample instead of shrinking for many minutes.
   */
 object SuperstepProps extends Properties("graft.superstep") {
 
@@ -128,14 +131,14 @@ object SuperstepProps extends Properties("graft.superstep") {
   }
 
   property("connectedComponents == union-find oracle at every block count") =
-    forAll(graphGen) { es =>
+    forAllNoShrink(graphGen) { es =>
       atEveryBlockCount(bruteComponents(es)) { b =>
         pairs(Superstep.connectedComponents(spark, frame(es), blocks = b))
       }
     }
 
   property("connectedComponents truncated at maxIterations: driver == one block, else coarser") =
-    forAll(graphGen, Gen.choose(1, 3)) { (es, maxIterations) =>
+    forAllNoShrink(graphGen, Gen.choose(1, 3)) { (es, maxIterations) =>
       val full = bruteComponents(es)
       def run(b: Int) = pairs(Superstep.connectedComponents(spark, frame(es), maxIterations, blocks = b))
       // one block converges in its first superstep; more blocks may stop
@@ -149,7 +152,7 @@ object SuperstepProps extends Properties("graft.superstep") {
     }
 
   property("shortestPaths == BFS oracle, with and without maxDist") =
-    forAll(graphGen, Gen.choose(1, 4)) { (es, maxDist) =>
+    forAllNoShrink(graphGen, Gen.choose(1, 4)) { (es, maxDist) =>
       val landmarks = Seq(nodes(es).min, 200L, 999L) // 999 is not a vertex
       def run(b: Int, cap: Int) =
         Superstep.shortestPaths(spark, frame(es), landmarks, cap, blocks = b).collect()
@@ -159,14 +162,14 @@ object SuperstepProps extends Properties("graft.superstep") {
     }
 
   property("stronglyConnected == mutual-reachability oracle at every block count") =
-    forAll(graphGen) { es =>
+    forAllNoShrink(graphGen) { es =>
       atEveryBlockCount(bruteScc(es)) { b =>
         pairs(Superstep.stronglyConnected(spark, frame(es), numIter = 50, blocks = b))
       }
     }
 
   property("stronglyConnected == GraphX at a tight numIter at every block count") =
-    forAll(graphGen, Gen.choose(1, 3)) { (es, numIter) =>
+    forAllNoShrink(graphGen, Gen.choose(1, 3)) { (es, numIter) =>
       val graphx = org.apache.spark.graphx.Graph
         .fromEdgeTuples(spark.sparkContext.parallelize(es), 0)
         .stronglyConnectedComponents(numIter).vertices.collect().toMap
@@ -176,14 +179,14 @@ object SuperstepProps extends Properties("graft.superstep") {
     }
 
   property("kCore == brute-force peel at every block count") =
-    forAll(graphGen, Gen.choose(1, 3)) { (es, k) =>
+    forAllNoShrink(graphGen, Gen.choose(1, 3)) { (es, k) =>
       atEveryBlockCount(bruteCore(es, k)) { b =>
         pairs(Superstep.kCore(spark, frame(es), k, blocks = b))
       }
     }
 
   property("kCore at maxRounds = 1: the full core, or a throw, never a truncated peel") =
-    forAll(graphGen, Gen.choose(1, 3)) { (es, k) =>
+    forAllNoShrink(graphGen, Gen.choose(1, 3)) { (es, k) =>
       val core = bruteCore(es, k)
       def run(b: Int) =
         try Right(pairs(Superstep.kCore(spark, frame(es), k, maxRounds = 1, blocks = b)))
@@ -193,7 +196,7 @@ object SuperstepProps extends Properties("graft.superstep") {
     }
 
   property("labelPropagation == synchronous scalar rounds at every block count") =
-    forAll(graphGen, Gen.choose(1, 4)) { (es, rounds) =>
+    forAllNoShrink(graphGen, Gen.choose(1, 4)) { (es, rounds) =>
       atEveryBlockCount(bruteLpa(es, rounds)) { b =>
         pairs(Superstep.labelPropagation(spark, frame(es), rounds, blocks = b))
       }
