@@ -1,9 +1,11 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 
 import graft.tools.Scratch
 
@@ -78,25 +80,41 @@ object Graft {
     spark
   }
 
-  /** Load one of the driver-generated tables from a scale-factor dir. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Load table `name` of a scale-factor dir (`<dir>/<name>.parquet`).
+    * The schema comes from the first data file's parquet footer, read
+    * in the calling JVM and converted under the session's parquet
+    * settings as Spark's inference does, so building a query runs no
+    * schema-inference job. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(s"$dir/$name.parquet")
+    dataFiles(conf, root).headOption.fold(spark.read.parquet(root.toString)) { f => // none: Spark's error
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val footer = try new Footer(f, reader.getFooter) finally reader.close()
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer,
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(root.toString)
+    }
+  }
 
   /** Row count of the same table, summed from its parquet footers in
     * the calling JVM — no Spark job, so a query may size itself by it
     * while it is being built. */
   def rowCount(spark: SparkSession, dir: String, name: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(s"$dir/$name.parquet")
+    dataFiles(conf, new Path(s"$dir/$name.parquet")).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
+  /** The parquet data files under `root`, in name order. */
+  private def dataFiles(conf: Configuration, root: Path): Seq[Path] = {
     val files = root.getFileSystem(conf).listFiles(root, true)
-    var rows = 0L
+    val out = Seq.newBuilder[Path]
     while (files.hasNext) {
       val f = files.next().getPath
-      if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) {
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try rows += reader.getRecordCount finally reader.close()
-      }
+      if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) out += f
     }
-    rows
+    out.result().sortBy(_.toString)
   }
 }

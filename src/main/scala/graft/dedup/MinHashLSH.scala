@@ -272,8 +272,8 @@ object MinHashLSH {
     */
   def candidatePairs(buckets: DataFrame, idCol: String,
                      maxBucket: Int = 0): DataFrame = {
-    // (r18 opt note: pinning `buckets` with a repartition +
-    // localCheckpoint — the sharedNeighbors treatment — was tried and
+    // (r18 opt note: pinning `buckets` with a repartition + a
+    // `graft.core.Pin`, as sharedNeighbors pins its edges, was tried and
     // REVERTED: at sf0.1 the duplicated signature subtrees are cheap
     // next to the pin's two job barriers (d2 0.92→1.38 s, d10
     // 1.11→1.95 s) and the frozen 32-wide layout leaks into iterative

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin
 import graft.text.TextFunctions
 
 /** EXACT set-similarity join at Jaccard threshold t, scaled by prefix
@@ -77,7 +78,7 @@ object SetSimJoin {
     // expression re-evaluates per consumer (measured 4× at sf0.1;
     // ReuseExchange does not collapse the differently-filtered
     // branches).
-    val pinned = sets.select(col(idCol), col(setCol)).localCheckpoint()
+    val pinned = Pin(sets.select(col(idCol), col(setCol)), "jaccardPairsBp.sets")
     // sz travels WITH each exploded element (one array-length eval per
     // input row) — cheaper than a second window pass over the element
     // stream. (An alternative shape — df as a COUNT window over the

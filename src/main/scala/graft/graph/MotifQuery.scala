@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin
+
 /** One query-graph edge: bind `from` → `to` by rows of `edges`
   * (a DataFrame whose FIRST two columns are source and target node
   * id). Different edges may draw from different DataFrames — the
@@ -131,15 +133,7 @@ object MotifQuery {
     // put ~40% of task-CPU in the duplicated subtrees). One
     // materialization of the distinct edge rows is strictly smaller
     // than ONE of the re-evaluations it removes (each re-run pays the
-    // scan plus the distinct's exchange). Same trade SetSimJoin
-    // already makes for its element stream. Fault-tolerance cost,
-    // stated honestly: localCheckpoint TRUNCATES lineage, so a lost
-    // executor makes the pinned blocks unrecoverable and the JOB
-    // fails (Spark cannot recompute them) — the caller must resubmit
-    // the query. Acceptable for a cheap derived intermediate in local
-    // mode; on a long-lived cluster at scale, prefer
-    // persist(MEMORY_AND_DISK_2) or reliable `checkpoint` into
-    // spark.graft.checkpointDir, which survive single-executor loss.
+    // scan plus the distinct's exchange).
     // The explicit hub-keyed repartition matters: a bare checkpoint
     // freezes whatever layout AQE coalesced the distinct down to
     // (4 byte-sized partitions at sf0.1), and the pair-expansion
@@ -148,11 +142,10 @@ object MotifQuery {
     // user-numbered repartitions, and the exchange is not an extra
     // cost at any scale — every REMOVED re-evaluation carried its own
     // full exchange of the same rows inside the duplicated distinct.
-    val sess = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = if (rowsHint > 0L)
-      math.max(1L, math.min(sess.toLong, rowsHint / 65536L + 1L)).toInt
-    else sess
-    val e = e1.repartition(parts, col("__dst")).localCheckpoint()
+    val spark = edges.sparkSession
+    val parts = if (rowsHint > 0L) EdgeGraph.sizedPartitions(spark, rowsHint)
+      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val e = Pin(e1.repartition(parts, col("__dst")), "sharedNeighbors.edges")
     val deg = e.groupBy("__dst").agg(count(lit(1)).as("__deg"))
     val hot = deg.where(col("__deg") > thr)
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.{Graft, Pin}
 import graft.core.Graft.table
 import graft.dedup.{MinHashLSH, SimHash}
 import graft.graph.EdgeGraph
@@ -135,17 +136,13 @@ object DedupQ {
     "d14_lsh_recall" -> { (s, dir) =>
       import graft.text.TextFunctions
       val docs = docToks(s, dir)
-      // parquet-metadata count (no scan); the SAME integer math runs
-      // in the oracle's ksel scalar subquery
-      val k = math.max(7L, table(s, dir, "documents").count() / 8192L)
+      // parquet-footer count (no Spark job); the SAME integer math
+      // runs in the oracle's ksel scalar subquery
+      val k = math.max(7L, Graft.rowCount(s, dir, "documents") / 8192L)
       // truth feeds BOTH the recall semi-join and the per-probe
       // totals; it is pair-count-sized (≈ the near-dup pair list), so
       // pin it once instead of re-running candidate generation per
-      // consumer. localCheckpoint truncates lineage: executor loss
-      // makes the pinned blocks unrecoverable and fails the job (the
-      // caller resubmits) — fine for this small derived set locally;
-      // at cluster scale use persist(MEMORY_AND_DISK_2) or a reliable
-      // checkpoint instead.
+      // consumer.
       // Hashed element sets (sorted distinct 2-gram hashes, the native
       // ShingleHashes kernel): the string-set form spent ~70% of the
       // query's task-CPU at v2sf5 on corpus-wide string machinery —
@@ -154,13 +151,12 @@ object DedupQ {
       // DRIFT_r12.md §3). Long elements make every one of those
       // primitive. The ORACLE hashes identically (shh/szh CTEs), so
       // the comparison is collision-exact, the d15 precedent.
-      val truth = graft.dedup.SetSimJoin.jaccardPairsBp(
+      val truth = Pin(graft.dedup.SetSimJoin.jaccardPairsBp(
           docs.select(col("doc_id"),
             graft.functions.ShingleHashes
               .shingle_hashes(col("toks"), 2, MinHashLSH.P).as("shs")),
           "doc_id", "shs", minBp = 5000, probePred = _ % k === 0)
-        .select("q", "o")
-        .localCheckpoint()
+        .select("q", "o"), "d14.truth")
       val sigs = MinHashLSH.signaturesU(docs, "doc_id", "toks", k = 8, shingleN = 2)
       val cand = MinHashLSH.candidatePairs(
         MinHashLSH.bandBucketsU(sigs, "doc_id", k = 8, bands = 4), "doc_id",
@@ -432,8 +428,7 @@ object DedupQ {
       // bench is eval-set-sized (distinct 3-gram hashes of the n/97
       // held-out docs); pin it once — its count sizes the filter, its
       // probe positions fill it, and the exactness join reads it again
-      val bench = sh.where(col("doc_id") % 97 === 0).select("h").distinct()
-        .localCheckpoint()
+      val bench = Pin(sh.where(col("doc_id") % 97 === 0).select("h").distinct(), "d15.bench")
       val nb = bench.count()
       val m = math.max(1L << 20, 64L * ((16L * nb + 63L) / 64L))
       def probe(h: Column, i: Int): Column =
@@ -518,19 +513,18 @@ object DedupQ {
     // greedy runs inside ONE aggregate expression over per-query
     // candidate/pair-sim arrays (bounded: 20 rows and 20·19 sims per
     // query BY CONSTRUCTION, regardless of corpus size); the corpus is
-    // scanned exactly once by the persisted top-20 stage. Scores are
+    // scanned exactly once by the pinned top-20 stage. Scores are
     // IEEE doubles computed by the identical expression tree in both
     // engines, so the gate is hash-exact through all five recursive
     // selection steps.
     "n10_mmr_rerank" -> { (s, dir) =>
       val emb = table(s, dir, "embeddings")
-      // persisted: both the candidate grouping and the pair-sim branch
-      // consume cand — uncached, the corpus-wide top-20 stage (the
+      // pinned: both the candidate grouping and the pair-sim branch
+      // consume cand — unpinned, the corpus-wide top-20 stage (the
       // dominant cost) would execute twice
-      val cand = CosineSim.topK(emb.filter(col("vec_id") < 5), emb,
+      val cand = Pin(CosineSim.topK(emb.filter(col("vec_id") < 5), emb,
           "vec_id", "vec_id", "embedding", k = 20)
-        .select(col("q"), col("neighbor").as("n"), col("cos").as("rel"))
-        .persist()
+        .select(col("q"), col("neighbor").as("n"), col("cos").as("rel")), "n10.cand")
       val cvec = emb.select(col("vec_id").as("n"), col("embedding").as("v"),
         sqrt(CosineSim.dot(col("embedding"), col("embedding"))).as("nn"))
       val withV = cand.join(cvec, "n")

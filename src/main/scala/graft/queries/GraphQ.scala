@@ -268,8 +268,8 @@ object GraphQ {
     },
 
     // g9b: SCC on the REPLICA-DISJOINT fold — identical to g9 at the
-    // gate scales (suppkey div 10000 = 0 there), but under the
-    // ScaleData replicas each copy folds into its OWN 50-node kernel
+    // gate scales (suppkey div 10000 = 0 there), but under id-strided
+    // replicas each copy folds into its OWN 50-node kernel
     // instead of all copies fusing into one ever-denser shared hub set
     // (partkey % 50 is replica-invariant; that deliberate
     // densification is g9's named drift residual, DRIFT_r09.md). This

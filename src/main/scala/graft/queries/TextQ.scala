@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Graft.table
+import graft.core.Pin
 import graft.text.TextFunctions._
 
 /** Text-analysis operators over `documents` — the training-data
@@ -864,11 +865,10 @@ object TextQ {
       // the API default is the 128-bit path, gated as m17): without materialization the
       // whole synthetic encode→decode→dHash fixture pipeline runs once
       // per join side (measured at sf5: ~2× the decode CPU). A real
-      // deployment's meta is a scanned table; persisting the (id,
-      // long) hash table here — corpus-count rows, 16 bytes each —
-      // restores that shape. Bench scrubs persisted frames per query.
-      val cached = meta.persist()
-      graft.multimodal.Multimodal.imageNearDup64(cached, maxHamming = 4)
+      // deployment's meta is a scanned table; pinning the (id, long)
+      // hash table here — corpus-count rows, 16 bytes each — restores
+      // that shape.
+      graft.multimodal.Multimodal.imageNearDup64(Pin(meta, "m10.meta"), maxHamming = 4)
         .orderBy("media_a", "media_b")
     },
 
@@ -906,8 +906,9 @@ object TextQ {
           val h = graft.multimodal.ImageCodec.dHash128(dec)
           Row(id, h(0), h(1))
         }
-      }(enc).persist()
-      graft.multimodal.Multimodal.imageNearDup(meta, maxHamming = 4)
+      }(enc)
+      // pinned for m10's reason: imageNearDup self-joins it
+      graft.multimodal.Multimodal.imageNearDup(Pin(meta, "m17.meta"), maxHamming = 4)
         .orderBy("media_a", "media_b")
     },
 
@@ -1233,16 +1234,15 @@ object TextQ {
         .orderBy(col("score_u").desc, col("doc_id")).limit(10)
         .select("doc_id")
       val d = docToks(s, dir)
-      // pinned: fbTerms feeds the match-pass vocabulary (evaluated
-      // eagerly below) AND the expansion scoring — as lineage, the
-      // whole bm25Scores→top-10→feedback-vocabulary chain would run
-      // twice. It is a 10-doc vocabulary — a handful of rows.
-      val fbTerms = d.join(broadcast(fb), "doc_id")
+      // pinned: fbTerms feeds the match-pass vocabulary (pinned
+      // below) AND the expansion scoring — as lineage, the whole
+      // bm25Scores→top-10→feedback-vocabulary chain would run twice.
+      // It is a 10-doc vocabulary — a handful of rows.
+      val fbTerms = Pin(d.join(broadcast(fb), "doc_id")
         .select(explode(array_distinct(col("toks"))).as("term"))
         .where(not(col("term").isin(bm25Terms: _*)) && length(col("term")) >= 3)
         .groupBy("term").agg(count(lit(1)).as("df_fb"))
-        .where(col("df_fb") >= 2)
-        .localCheckpoint()
+        .where(col("df_fb") >= 2), "b4.fbTerms")
       // ONE corpus tokenize+explode pass serves BOTH the corpus-df
       // count and the final re-rank (they used to be two full passes,
       // and the re-rank's pass could not even START until the
@@ -1250,20 +1250,16 @@ object TextQ {
       // chain of single-task corpus scans on the single-row-group
       // fixture). The match list is (doc_id, term) for terms in
       // fbTerms ∪ query terms — candidate-sized, far smaller than the
-      // corpus — and the two sets are disjoint by fbTerms'
-      // construction, so filtering the pin reproduces each original
-      // pass exactly. localCheckpoint truncates lineage: executor
-      // loss fails the job (caller resubmits); at cluster scale the
-      // pin is the smaller of (match list) vs (a second full corpus
-      // tokenize pass), the same trade the other query pins make.
+      // corpus, where a second pass would re-tokenize the whole
+      // corpus. Each consumer joins the pin back to its own term set
+      // (vocab is distinct), so neither depends on the two sets being
+      // disjoint.
       val vocab = fbTerms.select("term")
-        .unionByName(bm25Terms.toDF("term"))
-      val matches = d
+        .unionByName(bm25Terms.toDF("term")).distinct()
+      val matches = Pin(d
         .select(col("doc_id"), explode(array_distinct(col("toks"))).as("term"))
-        .join(broadcast(vocab), "term")
-        .localCheckpoint()
-      val corpusDf = matches
-        .where(not(col("term").isin(bm25Terms: _*)))
+        .join(broadcast(vocab), "term"), "b4.matches")
+      val corpusDf = matches.join(broadcast(fbTerms.select("term")), "term")
         .groupBy("term").agg(count(lit(1)).as("df_corpus"))
       val expansion = fbTerms.join(corpusDf, "term")
         .withColumn("exp_u", expr("(df_fb * 1000000) div (df_corpus + 1)"))

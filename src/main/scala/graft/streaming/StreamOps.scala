@@ -4,25 +4,14 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.tools.Scratch
+
 /** Structured-streaming surface (SURVEY.md §2.8 — NEW surface, not a
   * port: the reference is strictly batch build → read-only query).
   * The alignment/event ingest path becomes append-only streams with
   * event-time windows and stateful sessionization.
   */
 object StreamOps {
-
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  private lazy val cleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      scratchDirs.forEach { d =>
-        try {
-          java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { try java.nio.file.Files.deleteIfExists(p) catch { case _: Throwable => () }; () })
-        } catch { case _: Throwable => () }
-      }
-    }))
-  }
 
   /** A fresh checkpoint directory on the FASTEST writable volume —
     * tmpfs (`/dev/shm`) when present, else the JVM temp dir. Streaming
@@ -75,8 +64,8 @@ object StreamOps {
     * in the row count only. */
   def waveCount(n: Long): Int = math.max(2L, math.min(8L, n / 25000L)).toInt
 
-  /** State partition count for a replay of `n` rows — `waveCount`'s
-    * store-count sibling, and the same right-size-the-loop contract
+  /** State partition count for a replay of `n` rows — `waveCount`,
+    * read as a store count, and the same right-size-the-loop contract
     * as `EdgeGraph.sizedPartitions`. A stateful operator instantiates
     * (and commits, EVERY micro-batch) one state store per shuffle
     * partition per internal store type — a stream-stream join holds
@@ -88,22 +77,18 @@ object StreamOps {
     * measured single-host cap of 8 (store count beyond that is a
     * CLUSTER lever — stores spread across executors — not a
     * single-JVM one; see st10's sf10 measurement). */
-  def stateParts(n: Long): Int = math.max(2L, math.min(8L, n / 25000L)).toInt
+  def stateParts(n: Long): Int = waveCount(n)
 
-  /** A fresh scratch directory REGISTERED FOR CLEANUP at JVM exit —
+  /** A fresh scratch directory under `Scratch.fastLocalBase`,
+    * REGISTERED FOR CLEANUP at JVM exit (`Scratch.removeAtExit`) —
     * the one way harness-side temp dirs (file-source drop zones,
     * checkpoint roots) get created, so repeated bench/verify runs
-    * never accumulate temp litter. Same fast-volume choice as
-    * checkpoints. */
+    * never accumulate temp litter. */
   def scratchDir(prefix: String): String = {
-    cleanupHook
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base =
-      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-    val dir = java.nio.file.Files.createTempDirectory(base, s"graft_$prefix")
-    scratchDirs.add(dir)
-    dir.toString
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(Scratch.fastLocalBase), s"graft_$prefix").toString
+    Scratch.removeAtExit(dir)
+    dir
   }
 
   /** Run `body` (a bounded streaming replay: build, start, feed,

@@ -3,11 +3,12 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Cardinality-faithful scale-up — the successor to [[ScaleData]]'s
-  * replicate-with-strides shape, built because replication freezes
-  * exactly the distributions that drive operator cost at scale (the
-  * r9 drift audit's g9 fixture-densification artifact proved shape,
-  * not volume, moves the exponents):
+/** Cardinality-faithful scale-up of an sf fixture directory to `copies`×.
+  * It replaces an earlier replicate-with-strides tool (every table
+  * copied `copies` times, ids offset per replica), because replication
+  * freezes exactly the distributions that drive operator cost at scale
+  * (the r9 drift audit's g9 fixture-densification artifact proved
+  * shape, not volume, moves the exponents):
   *
   *  - **documents** are REGENERATED, not replicated: vocabulary grows
   *    by Heaps' law (V = 10·√T token types), token ranks draw
@@ -35,8 +36,13 @@ import org.apache.spark.sql.functions._
   *
   * Everything is deterministic in the output row's own ids (xxhash64
   * uniforms), so re-runs and partial re-writes reproduce bit-identical
-  * fixtures. Dimension tables and orders/customer keep [[ScaleData]]'s
-  * stride semantics so FK joins stay valid.
+  * fixtures. Dimension tables and orders/customer keep the replicate
+  * path's stride scheme so FK joins stay valid: region and nation are
+  * copied unchanged, and each of customer, supplier, part and orders is
+  * written `copies` times, replica r adding r·stride to every key
+  * (`S` below: custkey 100 000, suppkey 10 000, partkey 100 000,
+  * orderkey 1 000 000), so a foreign key and the key it references
+  * move together.
   *
   * Usage: runMain graft.tools.ScaleDataV2 [fromDir] [toDir] [copies]
   */

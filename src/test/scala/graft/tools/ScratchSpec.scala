@@ -32,4 +32,12 @@ class ScratchSpec extends AnyFunSuite {
   test("an absurd free-space floor yields None") {
     assert(Scratch.tmpfsDir("graft_spec_", Long.MaxValue).isEmpty)
   }
+
+  test("a streaming scratchCheckpoint dir lies under fastLocalBase and is removed at exit") {
+    val d = graft.streaming.StreamOps.scratchCheckpoint("scratch_spec")
+    val p = java.nio.file.Paths.get(d)
+    assert(java.nio.file.Files.isDirectory(p))
+    assert(p.getParent === java.nio.file.Paths.get(Scratch.fastLocalBase))
+    assert(Scratch.removedAtExit(d))
+  }
 }
